@@ -203,6 +203,33 @@ def _score(candidate, hit_too_large: bool, merge_factor: int,
 # merge execution (SegmentMerger analog)
 # ---------------------------------------------------------------------------
 
+def _refuse_mixed_offsets(postings) -> None:
+    """Raise when the merge inputs disagree on the offsets channel.
+
+    decode_blocks zero-fills the offsets of an input that lacks the channel,
+    and the merged blocks would then carry those zeros as real offsets — an
+    index's options never change mid-index (FieldInfo update-and-check), so
+    such inputs are refused. Probes each input's first block, among terms
+    with positions (the channel rides on them), before anything is
+    written."""
+    if postings is None:
+        return
+    elem = postings.schema["blocks"].dataType.elementType
+    if "off_bytes" not in elem.names:
+        return  # pre-offsets postings schema: no input has the channel
+    first = F.col("blocks")[0]
+    has_off = F.coalesce(F.length(first["off_bytes"]) > 0, F.lit(False))
+    rows = (postings.where(F.length(first["pos_bytes"]) > 0)
+            .select("segment_id", has_off.alias("off")).distinct().collect())
+    with_off = sorted({int(r["segment_id"]) for r in rows if r["off"]})
+    without = sorted({int(r["segment_id"]) for r in rows if not r["off"]})
+    if with_off and without:
+        raise ValueError(
+            f"cannot merge segments {with_off} (offsets channel) with "
+            f"segments {without} (no offsets channel): their offsets would "
+            "be zero-filled; rebuild one side with the same index_options")
+
+
 def execute_merge(spark: SparkSession, index_dir: str, segment_ids: list[int],
                   term_shards: int = 32,
                   soft_retention: "DataFrame | None" = None,
@@ -249,6 +276,9 @@ def execute_merge(spark: SparkSession, index_dir: str, segment_ids: list[int],
     # segment groups can run in parallel without id collisions
     new_id, new_wave = _reserved or (
         max(live) + 1, max(s["wave"] for s in live.values()) + 1)
+    from .catalog import read_live_partitions
+    postings = read_live_partitions(spark, index_dir, "postings", parts)
+    _refuse_mixed_offsets(postings)
 
     # Deleted docids are read task-locally per segment (.liv analog,
     # livedocs.read_segment_deletes): the remap closure ships only
@@ -333,9 +363,7 @@ def execute_merge(spark: SparkSession, index_dir: str, segment_ids: list[int],
         kept = docids[keep]
         return keep, kept - np.searchsorted(dels, kept) + offsets[seg_id]
 
-    from .catalog import read_live_partitions
     docs = read_live_partitions(spark, index_dir, "docs", parts)
-    postings = read_live_partitions(spark, index_dir, "postings", parts)
 
     # ---- index-sorted merge: docid remap = rank in the merged sort order ---
     # Lucene's MultiSorter builds a per-reader old->new docid map by merge-

@@ -569,7 +569,6 @@ class Scorer:
 
     # ---- phrase matching (ExactPhraseMatcher / SloppyPhraseMatcher) --------
     _POS_SHIFT = 32  # (docid << 32) + position composite keys
-    span_prefilter = True  # vectorized candidate cut before per-doc matchers
 
     def _pair_window_cut(self, cand: np.ndarray, flats: list,
                          lo_off: int, hi_off: int) -> np.ndarray:
@@ -577,9 +576,9 @@ class Scorer:
         streams admits an alignment b in [a+lo_off, a+hi_off] — a vectorized
         NECESSARY condition (each pairwise gap of any real match is bounded
         by the total slop), run as one searchsorted sweep over composite
-        (doc<<32)+pos keys before the faithful per-doc matchers. Never
-        removes a matching doc; the survivors still go through the exact
-        matcher. (Negative lo_off can in principle reach into the previous
+        (doc<<32)+pos keys before the vectorized walks or the faithful
+        per-doc matchers. Never removes a matching doc; the survivors still
+        go through the exact walk or matcher. (Negative lo_off can in principle reach into the previous
         doc's key range only for positions within slop of 2^32 — far beyond
         any real doc length.)"""
         sh = self._POS_SHIFT
@@ -596,8 +595,9 @@ class Scorer:
             alive = alive[np.isin(alive, dA[hit])]
         return alive
 
-    def _exact_phrase_counts(self, slot_flats):
-        """Vectorized ExactPhraseMatcher over a whole segment.
+    def _exact_phrase_keys(self, slot_flats):
+        """Vectorized ExactPhraseMatcher over a whole segment: composite
+        (doc<<32)+start keys of every exact-phrase match.
 
         slot_flats: per phrase slot j, (docids-repeated, flat positions) of
         the slot's term (or slot union). A phrase start at (doc, p) exists iff
@@ -616,27 +616,13 @@ class Scorer:
                 keys, kj, assume_unique=True)
             if keys.size == 0:
                 break
-        if keys is None or keys.size == 0:
-            z = np.zeros(0, dtype=np.int64)
-            return z, z.copy()
-        docs, counts = np.unique(keys >> sh, return_counts=True)
-        return docs, counts.astype(np.float64)
-
-    def _exact_phrase_keys(self, slot_flats):
-        """Composite (doc<<32)+start keys of every exact-phrase match —
-        the intersect chain of _exact_phrase_counts without the count fold."""
-        sh = self._POS_SHIFT
-        keys = None
-        for j, (dd, pp) in enumerate(slot_flats):
-            if j:
-                m = pp >= j
-                dd, pp = dd[m], pp[m]
-            kj = (dd << sh) + (pp - j)
-            keys = kj if keys is None else np.intersect1d(
-                keys, kj, assume_unique=True)
-            if keys.size == 0:
-                break
         return (np.zeros(0, dtype=np.int64) if keys is None else keys)
+
+    def _exact_phrase_counts(self, slot_flats):
+        """(docs, exact-phrase freqs): the match keys folded per doc."""
+        keys = self._exact_phrase_keys(slot_flats)
+        docs, counts = np.unique(keys >> self._POS_SHIFT, return_counts=True)
+        return docs, counts.astype(np.float64)
 
     def _sloppy_counts(self, cand, slot_maps, terms_per_pp, slop: int):
         """SloppyPhraseMatcher path: per candidate doc (conjunction-filtered,
@@ -667,91 +653,14 @@ class Scorer:
         return (np.asarray(out_docs, dtype=np.int64),
                 np.asarray(out_freqs, dtype=np.float64))
 
-    sloppy_2term_vectorized = True  # leapfrog walk replaces per-doc matcher
-
-    def _sloppy_counts_2term(self, cand, slop: int, tA: str, tB: str):
-        """Vectorized SloppyPhraseMatcher for the dominant 2-distinct-term
-        shape — NO per-doc Python matcher.
-
-        For exactly two non-repeating PhrasePositions the greedy in
-        SloppyPhraseMatcher.java:165-197 (always advance the least pp,
-        minimizing the current match length before emitting) collapses to an
-        alternating leapfrog over the two phrase-position streams: with
-        l_1 = max(firstA, firstB) (a cross-stream tie counts as l in B —
-        PhraseQueue breaks position ties by query offset, so A pops first),
-        each cycle emits matchLength = l_k − pred_other(l_k) (a match iff
-        ≤ slop) and jumps l_{k+1} = succ_other(l_k), stopping when the
-        successor doesn't exist. pred/succ never reach behind the stream
-        pointers because every prior l is itself a member of the other
-        stream's past. Exhaustive small-universe + randomized differential
-        tests against the faithful matcher pin the equivalence
-        (test_sloppy_vectorized.py).
-
-        Vectorization: the walk runs for ALL candidate docs simultaneously —
-        one np.searchsorted sweep per cycle over composite (doc<<32)+pos+1
-        keys (the +1 keeps B's phrase positions pos−1 nonnegative), with
-        per-doc states retiring as their walks end. Total work is
-        O(total matches · log positions) at numpy speed; the per-cycle
-        emissions are already in per-doc match order, so an order-preserving
-        np.add.at reproduces the matcher's sequential float32 accumulation
-        (freq += 1/(1+matchLength), PhraseScorer.java:76-79) bit-exactly."""
-        sh = self._POS_SHIFT
-        dA, pA = self.seg.flat_positions(tA)
-        dB, pB = self.seg.flat_positions(tB)
-        kA = (dA << sh) + pA + 1          # phrase pos = pos - 0
-        kB = (dB << sh) + pB              # phrase pos = pos - 1, then +1
-        base = cand << sh
-        iA = np.searchsorted(kA, base, side="left")
-        iB = np.searchsorted(kB, base, side="left")
-        kA0, kB0 = kA[iA], kB[iB]
-        lead = np.maximum(kA0, kB0)
-        lead_in_a = kA0 > kB0             # tie -> lead counts as in B
-        idx = np.arange(cand.size)
-        em_idx, em_len = [], []
-        while idx.size:
-            other_is_b = lead_in_a
-            nxt_lead = np.empty_like(lead)
-            alive = np.zeros(lead.shape, dtype=bool)
-            for flag, keys in ((other_is_b, kB), (~other_is_b, kA)):
-                if not flag.any():
-                    continue
-                li = lead[flag]
-                r = np.searchsorted(keys, li, side="right")
-                pred = keys[r - 1]        # same doc by the walk invariant
-                e = li - pred
-                ok = e <= slop
-                if ok.any():
-                    em_idx.append(idx[flag][ok])
-                    em_len.append(e[ok])
-                a = r < keys.size
-                succ = np.where(a, keys[np.minimum(r, keys.size - 1)], 0)
-                a &= (succ >> sh) == (li >> sh)
-                nxt_lead[flag] = succ
-                alive[flag] = a
-            lead = nxt_lead[alive]
-            lead_in_a = ~lead_in_a[alive]  # lead jumped to the other stream
-            idx = idx[alive]
-        if not em_idx:
-            z = np.zeros(0, dtype=np.int64)
-            return z, z.astype(np.float64)
-        ei = np.concatenate(em_idx)
-        el = np.concatenate(em_len)
-        order = np.argsort(ei, kind="stable")  # per-doc cycle order kept
-        ei, el = ei[order], el[order]
-        acc_dt = (np.float32 if self.dtype == np.float32 else np.float64)
-        w = acc_dt(1.0) / (acc_dt(1.0) + el.astype(acc_dt))
-        freq = np.zeros(cand.size, dtype=acc_dt)
-        np.add.at(freq, ei, w)            # unbuffered, sequential in order
-        hit = freq > 0
-        return cand[hit], freq[hit].astype(np.float64)
-
-    sloppy_kterm_vectorized = True  # k-stream leapfrog replaces per-doc loop
-
-    def _sloppy_counts_kterm(self, cand, slop: int, terms):
-        """Vectorized SloppyPhraseMatcher for k >= 3 DISTINCT single-term
-        PhrasePositions — zero per-doc Python (the 2-term walk's leapfrog
-        generalized; the repeats machinery never engages when all terms are
-        distinct, so the greedy is the whole algorithm).
+    def _sloppy_counts_kterm(self, cand, slop: int, flats: list):
+        """Vectorized SloppyPhraseMatcher for k >= 2 PhrasePositions with no
+        term repeated (``flats``: per phrase slot, in offset order, the
+        (docids, positions) stream of its term, or of a MultiPhraseQuery
+        slot's deduped member union — see _sloppy_kterm_walk) over
+        candidate docs that hold every slot — zero per-doc Python (the
+        repeats machinery never engages when no term repeats, so the greedy
+        is the whole algorithm).
 
         With no repeats, each iteration of the greedy in
         SloppyPhraseMatcher.java:165-197 is one CYCLE of a k-stream leapfrog:
@@ -775,14 +684,13 @@ class Scorer:
         reproduces freq += 1/(1+matchLength) in the scoring dtype bit-exactly
         (SloppyPhraseMatcher.java:160-162, PhraseScorer.java:76-79).
         Differential proof vs the faithful matcher:
-        test_sloppy_kterm_vectorized.py (exhaustive 3-term small-universe +
-        randomized k in 3..5, both dtypes, multi-doc)."""
+        test_sloppy_vectorized.py (k=2: every subset pair of positions 0..5,
+        randomized multi-doc) and test_sloppy_kterm_vectorized.py
+        (exhaustive 3-term small-universe + randomized k in 3..5), both
+        dtypes."""
         sh = self._POS_SHIFT
-        offs = len(terms)  # keeps pos - j nonnegative in the low bits
-        keys = []
-        for j, t in enumerate(terms):
-            d, p = self.seg.flat_positions(t)
-            keys.append((d << sh) + p - j + offs)
+        offs = len(flats)  # keeps pos - j nonnegative in the low bits
+        keys = [(d << sh) + p - j + offs for j, (d, p) in enumerate(flats)]
         return self._sloppy_kterm_walk(cand, slop, keys)
 
     def _sloppy_kterm_walk(self, cand, slop: int, keys: list):
@@ -860,47 +768,42 @@ class Scorer:
         for t in set(terms):
             cnt[self.seg.decode(t)[0]] += 1
         cand = np.flatnonzero(cnt == len(set(terms)))
-        if (cand.size and len(terms) == 2 and terms[0] != terms[1]
-                and self.sloppy_2term_vectorized):
-            return self._sloppy_counts_2term(cand, q.slop, terms[0], terms[1])
-        if (cand.size and len(terms) >= 3
-                and len(set(terms)) == len(terms)
-                and self.sloppy_kterm_vectorized):
-            if self.span_prefilter:
-                flats = [self.seg.flat_positions(t) for t in terms]
-                cand = self._pair_window_cut(cand, flats, 1 - q.slop,
-                                             1 + q.slop)
-            if cand.size == 0:
-                return cand, np.zeros(0, dtype=np.float64)
-            return self._sloppy_counts_kterm(cand, q.slop, terms)
-        if cand.size and self.span_prefilter:
-            # adjacent slots of a real sloppy match satisfy
-            # |(p_{i+1}-(i+1)) - (p_i-i)| <= slop, i.e. b in [a+1-slop,
-            # a+1+slop] — cut candidates vectorized before the matcher
-            flats = [self.seg.flat_positions(t) for t in terms]
-            cand = self._pair_window_cut(cand, flats, 1 - q.slop, 1 + q.slop)
         if cand.size == 0:
             return cand, np.zeros(0, dtype=np.float64)
+        # adjacent slots of a real sloppy match satisfy
+        # |(p_{i+1}-(i+1)) - (p_i-i)| <= slop, i.e. b in [a+1-slop,
+        # a+1+slop] — cut candidates vectorized before either matcher
+        flats = [self.seg.flat_positions(t) for t in terms]
+        cand = self._pair_window_cut(cand, flats, 1 - q.slop, 1 + q.slop)
+        if cand.size == 0:
+            return cand, np.zeros(0, dtype=np.float64)
+        if len(terms) >= 2 and len(set(terms)) == len(terms):
+            return self._sloppy_counts_kterm(cand, q.slop, flats)
+        # repeated terms engage the repeats machinery: faithful per-doc
         slot_maps = [[(self.seg.decode(t)[0], self.seg.positions(t))]
                      for t in terms]
         return self._sloppy_counts(cand, slot_maps,
                                    [(t,) for t in terms], q.slop)
 
+    def _slot_union_flat(self, slot):
+        """(docids, positions) of a MultiPhraseQuery slot: the sorted,
+        deduped union of its member terms' streams — the UnionPostingsEnum
+        analog."""
+        sh = self._POS_SHIFT
+        parts = [self.seg.flat_positions(t) for t in slot]
+        dd = np.concatenate([p[0] for p in parts])
+        pp = np.concatenate([p[1] for p in parts])
+        keys = np.unique((dd << sh) + pp)
+        return keys >> sh, keys & ((1 << sh) - 1)
+
     def _multi_phrase_freqs(self, q: Q.MultiPhraseQuery):
         """MultiPhraseQuery matcher: per phrase position i, the posting union
         of slots[i] (UnionPostingsEnum analog); freq = number of alignments
-        p such that every slot matches at p+i (exact), or the faithful sloppy
-        matcher over the unioned position lists (slop > 0)."""
+        p such that every slot matches at p+i (exact), or the sloppy matcher
+        over the unioned position lists (slop > 0)."""
         seg = self.seg
+        flats = [self._slot_union_flat(slot) for slot in q.slots]
         if q.slop == 0:
-            flats = []
-            for slot in q.slots:
-                parts = [seg.flat_positions(t) for t in slot]
-                dd = np.concatenate([p[0] for p in parts])
-                pp = np.concatenate([p[1] for p in parts])
-                keys = np.unique((dd << self._POS_SHIFT) + pp)
-                flats.append((keys >> self._POS_SHIFT,
-                              keys & ((1 << self._POS_SHIFT) - 1)))
             return self._exact_phrase_counts(flats)
         max_doc = seg.max_doc
         # candidate docs: contain >= 1 term of EVERY slot
@@ -910,38 +813,19 @@ class Scorer:
             for t in slot:
                 m[seg.decode(t)[0]] = True
             mask &= m
-        cand = np.flatnonzero(mask)
-        if cand.size and self.span_prefilter:
-            flats = []
-            for slot in q.slots:
-                parts = [seg.flat_positions(t) for t in slot]
-                dd = np.concatenate([p[0] for p in parts])
-                pp = np.concatenate([p[1] for p in parts])
-                keys = np.unique((dd << self._POS_SHIFT) + pp)
-                flats.append((keys >> self._POS_SHIFT,
-                              keys & ((1 << self._POS_SHIFT) - 1)))
-            cand = self._pair_window_cut(cand, flats, 1 - q.slop, 1 + q.slop)
+        cand = self._pair_window_cut(np.flatnonzero(mask), flats,
+                                     1 - q.slop, 1 + q.slop)
         if cand.size == 0:
             return cand, np.zeros(0, dtype=np.float64)
         all_terms = [t for slot in q.slots for t in slot]
-        if (len(set(all_terms)) == len(all_terms) and len(q.slots) >= 2
-                and self.sloppy_kterm_vectorized):
+        if len(set(all_terms)) == len(all_terms) and len(q.slots) >= 2:
             # no term repeats across slots -> the repeats machinery never
             # engages and the k-stream walk applies, with each slot's stream
             # = the deduped union of its member terms' positions
-            sh = self._POS_SHIFT
-            offs = len(q.slots)
-            ukeys = []
-            for j, slot in enumerate(q.slots):
-                parts = [seg.flat_positions(t) for t in slot]
-                dd = np.concatenate([p[0] for p in parts])
-                pp = np.concatenate([p[1] for p in parts])
-                ukeys.append(np.unique((dd << sh) + pp) - j + offs)
-            return self._sloppy_kterm_walk(cand, q.slop, ukeys)
+            return self._sloppy_counts_kterm(cand, q.slop, flats)
         slot_maps = [[(seg.decode(t)[0], seg.positions(t)) for t in slot]
                      for slot in q.slots]
         return self._sloppy_counts(cand, slot_maps, list(q.slots), q.slop)
-
 
     # ---- spans family (o.a.l/search/spans/) -------------------------------
     # Spans are (start, end, width) triples in Lucene iteration order
@@ -1111,8 +995,6 @@ class Scorer:
             return self._doc_spans(q.query, doc)
         raise TypeError(type(q))
 
-    span_near_2term_vectorized = True  # closed-form walk, no per-doc Python
-
     _EMPTY_STREAM = (np.zeros(0, dtype=np.int64),) * 4
 
     def _fold_span_stream(self, docs: np.ndarray, widths: np.ndarray):
@@ -1129,80 +1011,21 @@ class Scorer:
         out = np.flatnonzero(acc > 0)
         return out, acc[out].astype(np.float64)
 
-    def _near_2term_stream(self, cand: np.ndarray, tA: str, tB: str,
-                           slop: int, in_order: bool):
-        """Vectorized NearSpans emissions (docs, starts, ends, widths) for
-        the dominant 2-distinct-term shape, in the faithful matchers'
-        per-doc emission order, docs ascending.
+    @staticmethod
+    def _flat_in(cand: np.ndarray, d: np.ndarray, p: np.ndarray):
+        """The rows of a flat (docids, positions) stream whose doc is in the
+        sorted candidate array ``cand``."""
+        i = np.searchsorted(cand, d)
+        m = (i < cand.size) & (cand[np.minimum(i, cand.size - 1)] == d)
+        return d[m], p[m]
 
-        Both per-doc algorithms collapse to closed forms over the two sorted
-        position streams (proof: exhaustive + randomized differential tests
-        vs the faithful matchers, test_span_near_vectorized.py):
-
-        ORDERED (NearSpansOrdered.java:60-121): the later clause's pointer is
-        monotone and the constraint start >= a+1 is monotone in a, so each
-        first-clause position a independently matches b* = first B-position
-        >= a+1 with width b* - a - 1, emitting (a, b*+1, width) iff width <=
-        slop; exhaustion only removes a's that could never match.
-
-        UNORDERED (NearSpansUnordered window queue): the queue pops the
-        merged (position, clause-ord) order; an A-pop at a sees partner
-        first b >= a (gap b - a), a B-pop at b sees partner first a > b
-        (the tie pops A first), each emitting (pop, pop + gap + 1, gap + 1)
-        iff gap <= slop + 1; a pop with no partner ends the doc, which
-        removes only matchless pops.
-
-        One searchsorted per direction over composite (doc<<32)+pos keys for
-        ALL candidate docs at once; emissions come out in merged-pop order
-        so the float32 freq fold (_fold_span_stream) is bit-exact."""
-        sh = self._POS_SHIFT
-
-        def _flat_in(term):
-            d, p = self._group_flat_positions(term)
-            i = np.searchsorted(cand, d)
-            m = (i < cand.size) & (cand[np.minimum(i, cand.size - 1)] == d)
-            return d[m], p[m], (d[m] << sh) + p[m]
-
-        dA, pA, kA = _flat_in(tA)
-        dB, pB, kB = _flat_in(tB)
-        if kA.size == 0 or kB.size == 0:
-            return self._EMPTY_STREAM
-
-        def _partner(keys_from, keys_to, target):
-            j = np.searchsorted(keys_to, target, side="left")
-            ok = j < keys_to.size
-            pk = keys_to[np.minimum(j, keys_to.size - 1)]
-            ok &= (pk >> sh) == (keys_from >> sh)
-            return ok, pk
-
-        if in_order:
-            ok, bk = _partner(kA, kB, kA + 1)
-            width = bk - kA - 1
-            emit = ok & (width <= slop)
-            # kA is (doc, pos)-sorted == emission order; span end = b*+1
-            w = width[emit]
-            return dA[emit], pA[emit], pA[emit] + w + 2, w
-        oka, bk = _partner(kA, kB, kA)       # first b >= a (tie: b == a)
-        ga = bk - kA
-        ea = oka & (ga <= slop + 1)
-        okb, ak = _partner(kB, kA, kB + 1)   # first a > b (tie pops A)
-        gb = ak - kB
-        eb = okb & (gb <= slop + 1)
-        # merged pop order: by key, A before B on ties (clause ord)
-        keys = np.concatenate([kA[ea] * 2, kB[eb] * 2 + 1])
-        docs_e = np.concatenate([dA[ea], dB[eb]])
-        starts_e = np.concatenate([pA[ea], pB[eb]])
-        widths = np.concatenate([ga[ea], gb[eb]]) + 1
-        order = np.argsort(keys, kind="stable")
-        return (docs_e[order], starts_e[order], (starts_e + widths)[order],
-                widths[order])
-
-    span_near_kterm_vectorized = True  # k>=3 term clauses, no per-doc Python
-
-    def _near_kterm_stream(self, cand: np.ndarray, terms, slop: int,
+    def _near_kterm_stream(self, cand: np.ndarray, flats: list, slop: int,
                            in_order: bool):
         """Vectorized NearSpans emissions (docs, starts, ends, widths) for
-        k >= 3 distinct single-term clauses, per-doc emission order.
+        k >= 2 clauses, per-doc emission order. ``flats`` holds, per clause,
+        the (docids, positions) stream of a term, or of an Or-of-terms
+        clause (the key-sorted union of its members, _group_flat_positions);
+        no term appears in two clauses.
 
         ORDERED (NearSpansOrdered.java:60-121): the later clauses' pointers
         are monotone and every per-clause constraint start >= prev_end is
@@ -1227,17 +1050,13 @@ class Scorer:
         emission order for the float fold.
 
         Differential proof vs the faithful matchers:
-        test_span_near_kterm_vectorized.py."""
+        test_span_near_vectorized.py (k=2),
+        test_span_near_kterm_vectorized.py (k=3..5) and
+        test_span_near_group_vectorized.py (Or-of-terms clauses)."""
         sh = self._POS_SHIFT
-        k = len(terms)
-
-        def _flat_in(term):
-            d, p = self._group_flat_positions(term)
-            i = np.searchsorted(cand, d)
-            m = (i < cand.size) & (cand[np.minimum(i, cand.size - 1)] == d)
-            return d[m], p[m], (d[m] << sh) + p[m]
-
-        flats = [_flat_in(t) for t in terms]
+        k = len(flats)
+        restricted = (self._flat_in(cand, d, p) for d, p in flats)
+        flats = [(d, p, (d << sh) + p) for d, p in restricted]
         if any(f[2].size == 0 for f in flats):
             return self._EMPTY_STREAM
 
@@ -1303,9 +1122,6 @@ class Scorer:
         return (docs_e[order], starts_e[order], (starts_e + wid_e)[order],
                 wid_e[order])
 
-    span_combinators_vectorized = True  # Or/Not/First/Range/Contain/Within
-    span_near_group_vectorized = True  # Near over Or-of-term clauses too
-
     def _group_flat_positions(self, group):
         """flat_positions of a term OR the (key-sorted, duplicates-kept)
         union of a tuple of terms — the emission stream of a SpanOr over
@@ -1314,8 +1130,6 @@ class Scorer:
         rely on (the SpanOr queue's (start, end, clause-ord) tie order only
         reorders IDENTICAL (start, end) spans, which cannot change any
         emission value)."""
-        if isinstance(group, str):
-            return self.seg.flat_positions(group)
         if len(group) == 1:
             return self.seg.flat_positions(group[0])
         parts = [self.seg.flat_positions(t) for t in group]
@@ -1340,23 +1154,17 @@ class Scorer:
 
     def _span_vec_ok(self, q: Q.SpanQuery) -> bool:
         """True when the whole span tree evaluates through the vectorized
-        stream algebra: term leaves, Near over >= 2 DISTINCT term leaves
-        (gated by the Near flags so differential tests can force the
-        faithful per-doc matchers), and every span combinator recursing."""
+        stream algebra: term leaves, Near over >= 2 clauses that are terms
+        or Or-of-terms groups with no term shared between clauses (the walk
+        assumes disjoint streams), and every span combinator recursing."""
         if isinstance(q, Q.SpanTermQuery):
             return True
         if isinstance(q, Q.SpanNearQuery):
-            flag = (self.span_near_2term_vectorized if len(q.clauses) == 2
-                    else self.span_near_kterm_vectorized)
             groups = [self._near_group(c) for c in q.clauses]
             if any(g is None for g in groups) or len(groups) < 2:
                 return False
-            if any(len(g) > 1 for g in groups):
-                # Or-of-terms clauses ride the same walks over merged
-                # streams (gated separately for differential tests)
-                flag = flag and self.span_near_group_vectorized
             terms = [t for g in groups for t in g]
-            return bool(flag) and len(set(terms)) == len(terms)
+            return len(set(terms)) == len(terms)
         if isinstance(q, Q.SpanOrQuery):
             return all(self._span_vec_ok(c) for c in q.clauses)
         if isinstance(q, Q.SpanNotQuery):
@@ -1395,33 +1203,18 @@ class Scorer:
         test_span_streams_vectorized.py."""
         sh = self._POS_SHIFT
         if isinstance(q, Q.SpanTermQuery):
-            d, p = self.seg.flat_positions(q.term)
-            i = np.searchsorted(cand, d)
-            m = (i < cand.size) & (cand[np.minimum(i, cand.size - 1)] == d)
-            d, p = d[m], p[m]
+            d, p = self._flat_in(cand, *self.seg.flat_positions(q.term))
             return d, p, p + 1, np.zeros(p.size, dtype=np.int64)
         if isinstance(q, Q.SpanNearQuery):
             # each clause is a term or an Or-of-terms (checked by
             # _span_vec_ok): its emission stream is the key-sorted union of
-            # member positions, so the walks run unchanged on merged streams
+            # member positions, so the walk runs unchanged on merged streams
             groups = [self._near_group(c) for c in q.clauses]
-            sub = cand
-            if self.span_prefilter and len(groups) >= 3:
-                flats = [self._group_flat_positions(g) for g in groups]
-                if q.in_order:
-                    sub = self._pair_window_cut(sub, flats, 1, 1 + q.slop)
-                else:
-                    # unordered window bound is max-min <= slop+k-1 (see
-                    # the eval_spans prefilter note): slop+1 is only sound
-                    # for k == 2
-                    ub = q.slop + len(groups) - 1
-                    sub = self._pair_window_cut(sub, flats, -ub, ub)
+            flats = [self._group_flat_positions(g) for g in groups]
+            sub = self._near_window_cut(cand, flats, q.slop, q.in_order)
             if sub.size == 0:
                 return self._EMPTY_STREAM
-            if len(groups) == 2:
-                return self._near_2term_stream(sub, groups[0], groups[1],
-                                               q.slop, q.in_order)
-            return self._near_kterm_stream(sub, groups, q.slop, q.in_order)
+            return self._near_kterm_stream(sub, flats, q.slop, q.in_order)
         if isinstance(q, Q.SpanOrQuery):
             parts = [self._span_streams_vec(c, cand) for c in q.clauses]
             d = np.concatenate([x[0] for x in parts])
@@ -1484,31 +1277,41 @@ class Scorer:
             return self._span_streams_vec(q.query, cand)
         raise TypeError(type(q))
 
+    def _near_window_cut(self, cand: np.ndarray, flats: list, slop: int,
+                         in_order: bool) -> np.ndarray:
+        """Pair-window cut for a Near over clause streams ``flats``: any
+        emitted span bounds every adjacent clause pair's gap. Ordered: gaps
+        sum to <= slop, so b in [a+1, a+1+slop]. Unordered: the window test
+        max_end - top_start - k <= slop bounds max(p)-min(p) <= slop+k-1, so
+        |b-a| <= slop+k-1 — NOT slop+1: for k >= 3 two adjacent clauses may
+        sit far apart while a third stretches the window."""
+        if in_order:
+            return self._pair_window_cut(cand, flats, 1, 1 + slop)
+        ub = slop + len(flats) - 1
+        return self._pair_window_cut(cand, flats, -ub, ub)
+
     def eval_spans(self, q: Q.SpanQuery):
         """(docids asc, sloppy freqs) over the segment. freq = sum over spans
         of 1/(1 + width), accumulated in the scoring dtype exactly like
         SpanScorer.setFreqCurrentDoc (float32 in Lucene-parity mode)."""
         cand = self._span_candidates(q)
-        if (cand.size and self.span_combinators_vectorized
-                and self._span_vec_ok(q)):
+        if cand.size and self._span_vec_ok(q):
             d, _s, _e, w = self._span_streams_vec(q, cand)
             return self._fold_span_stream(d, w)
-        if (cand.size and self.span_prefilter
-                and isinstance(q, Q.SpanNearQuery) and len(q.clauses) > 1
+        if (isinstance(q, Q.SpanNearQuery) and len(q.clauses) > 1
                 and all(isinstance(c, Q.SpanTermQuery) for c in q.clauses)):
-            # flat term-span near: any emitted span bounds every adjacent
-            # clause pair's gap (ordered: gaps sum to <= slop, so b in
-            # [a+1, a+1+slop]; unordered: the window test max_end -
-            # top_start - k <= slop bounds max(p)-min(p) <= slop+k-1, so
-            # |b-a| <= slop+k-1 — NOT slop+1: for k >= 3 two adjacent
-            # clauses may sit far apart while a third stretches the window)
-            # — vectorized cut before the faithful per-doc span algebra
+            # flat term-span near with a repeated term: vectorized cut
+            # before the faithful per-doc span algebra
             flats = [self.seg.flat_positions(c.term) for c in q.clauses]
-            if q.in_order:
-                cand = self._pair_window_cut(cand, flats, 1, 1 + q.slop)
-            else:
-                ub = q.slop + len(q.clauses) - 1
-                cand = self._pair_window_cut(cand, flats, -ub, ub)
+            cand = self._near_window_cut(cand, flats, q.slop, q.in_order)
+        return self._spans_per_doc(q, cand)
+
+    def _spans_per_doc(self, q: Q.SpanQuery, cand: np.ndarray):
+        """Faithful per-doc reference: (docids, freqs) of q over ``cand``
+        through _doc_spans, the NearSpans/ContainSpans pointer ports. The
+        engine reaches it only for trees _span_vec_ok refuses (a term shared
+        between Near clauses, non-flattenable Near clauses); differential
+        tests run it over uncut candidates."""
         acc_dt = (np.float32 if self.dtype == np.float32 else np.float64)
         docs, freqs = [], []
         for doc in cand:
@@ -1556,8 +1359,9 @@ class Scorer:
         """Vectorized NECESSARY-condition cut for gap-bounded all-term shapes
         (same trick as the span/sloppy families): any emitted interval bounds
         every adjacent position-stream pair's distance, so a composite-key
-        searchsorted sweep removes non-candidates before the per-doc algebra."""
-        if cand.size == 0 or not self.span_prefilter:
+        searchsorted sweep removes non-candidates before the vectorized walk
+        or the per-doc algebra."""
+        if cand.size == 0:
             return cand
 
         def all_terms(s):
@@ -1598,8 +1402,6 @@ class Scorer:
         if i >= d.size or d[i] != doc:
             return ()
         return self.seg.positions(term)[i]
-
-    interval_kterm_vectorized = True  # term-leaf shapes, no per-doc Python
 
     def _interval_counts_vec(self, src, cand: np.ndarray):
         """Vectorized minimal-interval evaluation for the all-term-leaf
@@ -1699,14 +1501,12 @@ class Scorer:
         composite (doc<<32)+pos. None when the shape isn't covered."""
         sh = self._POS_SHIFT
 
-        def _flat_in(term):
-            d, p = self.seg.flat_positions(term)
-            i = np.searchsorted(cand, d)
-            m = (i < cand.size) & (cand[np.minimum(i, cand.size - 1)] == d)
-            return d[m], (d[m] << sh) + p[m]
+        def _keys_in(term):
+            d, p = self._flat_in(cand, *self.seg.flat_positions(term))
+            return d, (d << sh) + p
 
         if isinstance(src, Q.ITerm):
-            d, kk = _flat_in(src.term)
+            d, kk = _keys_in(src.term)
             return d, kk, kk
         if isinstance(src, (Q.IMaxGaps, Q.IMaxWidth)):
             inner = src.source
@@ -1777,7 +1577,7 @@ class Scorer:
             return dd, keys, keys + (k - 1)
         if k < 2 or len(set(terms)) != k:
             return None  # repeated terms: shared streams, keep per-doc
-        flats = [_flat_in(t) for t in terms]
+        flats = [_keys_in(t) for t in terms]
         if any(f[1].size == 0 for f in flats):
             z = np.zeros(0, dtype=np.int64)  # a clause absent from cand:
             return z, z.copy(), z.copy()     # no intervals anywhere
@@ -1827,10 +1627,18 @@ class Scorer:
         src = q.source
         cand = self._interval_candidates(src)
         cand = self._interval_window_cut(src, cand)
-        if cand.size and self.interval_kterm_vectorized:
+        if cand.size:
             out = self._interval_counts_vec(src, cand)
             if out is not None:
                 return out
+        return self._intervals_per_doc(src, cand)
+
+    def _intervals_per_doc(self, src, cand: np.ndarray):
+        """Faithful per-doc reference: (docids, freqs) of the interval
+        source over ``cand`` through the lazy iterators of intervals.py.
+        The engine reaches it only for sources _interval_counts_vec refuses
+        (repeated terms, non-term leaves under ordered/unordered, maxgaps
+        over an or); differential tests run it over uncut candidates."""
         acc_dt = (np.float32 if self.dtype == np.float32 else np.float64)
         mext = IV.min_extent(src)
         docs, freqs = [], []

@@ -4,7 +4,9 @@ import numpy as np
 import pytest
 
 from lucene_7_x_9_x_spark.index.builder import build_index
+from lucene_7_x_9_x_spark.index.catalog import IndexCatalog
 from lucene_7_x_9_x_spark.index.checkindex import check_index
+from lucene_7_x_9_x_spark.index.merge import execute_merge
 from lucene_7_x_9_x_spark.index.writer import IndexWriter
 from lucene_7_x_9_x_spark.search import query as Q
 from lucene_7_x_9_x_spark.search.searcher import IndexSearcher
@@ -64,3 +66,20 @@ def test_add_indexes_rejects_mismatch(spark, tmp_path):
     IndexWriter(spark, dd, int_keys=True).delete_documents_by_keys([10])
     with pytest.raises(ValueError, match="deletes"):
         w.add_indexes(dd)
+
+
+def test_merge_refuses_mixed_offsets_channels(spark, tmp_path):
+    """add_indexes can place segments without an offsets channel beside
+    segments with one; execute_merge must refuse them before any commit
+    instead of zero-filling the missing offsets."""
+    da = _build(spark, tmp_path, "a6", A_ROWS, index_options="offsets")
+    db = _build(spark, tmp_path, "b6", B_ROWS, index_options="positions")
+    with IndexWriter(spark, da, int_keys=True) as w:
+        w.add_indexes(db)
+    cat = IndexCatalog(da)
+    head, live = cat.head(), cat.live_segments()
+    with pytest.raises(ValueError, match="offsets channel"):
+        execute_merge(spark, da, [s["segment_id"] for s in live])
+    cat = IndexCatalog(da)
+    assert cat.head() == head
+    assert cat.live_segments() == live

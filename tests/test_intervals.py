@@ -217,18 +217,26 @@ def test_interval_query_sigmoid(searcher):
     assert abs(float(top["score"]) - (1.0 - 1.0 / (f ** 2 + 1.0))) < 1e-6
 
 
-def test_interval_window_cut_preserves_results(searcher):
+def test_interval_window_cut_preserves_results():
+    """The window cut is a necessary condition: on the searcher corpus the
+    engine's eval_intervals (cut, then the walk) equals the per-doc
+    iterators over UNCUT candidates. Driver-side, because the kernel runs in
+    Python workers that never see a driver-side patch of the Scorer."""
+    import numpy as np
+
+    from lucene_7_x_9_x_spark.functions import bm25
     from lucene_7_x_9_x_spark.search import kernel as K
-    q = Q.IntervalQuery(
-        Q.IMaxGaps(1, Q.IOrdered((Q.ITerm("alpha"), Q.ITerm("beta")))))
-    with_cut = searcher.search(q, k=10)
-    K.Scorer.span_prefilter = False
-    try:
-        without_cut = searcher.search(q, k=10)
-    finally:
-        K.Scorer.span_prefilter = True
-    assert _keys(with_cut) == _keys(without_cut) == [0, 4]
-    assert list(with_cut.hits["score"]) == list(without_cut.hits["score"])
+    from tests.stub_segment import segment_from_tokens
+
+    seg, gdf = segment_from_tokens({d: text.split() for d, text in ROWS})
+    sc = K.Scorer(seg, bm25.BM25Stats(len(ROWS), 20, dtype=np.float32), gdf)
+    src = Q.IMaxGaps(1, Q.IOrdered((Q.ITerm("alpha"), Q.ITerm("beta"))))
+    cand = sc._interval_candidates(src)
+    assert sc._interval_window_cut(src, cand).size < cand.size
+    d, f = sc.eval_intervals(Q.IntervalQuery(src))
+    rd, rf = sc._intervals_per_doc(src, cand)
+    assert d.tolist() == rd.tolist() == [0, 4]
+    assert f.tolist() == rf.tolist()
 
 
 def test_interval_query_multifield(spark, tmp_path):

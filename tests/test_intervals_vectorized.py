@@ -5,8 +5,9 @@ unordered / phrase sources over distinct term leaves (optionally under one
 maxgaps/maxwidth filter) reduce to chained / partner searchsorteds plus a
 successor-equal-end dedup. These tests pin the equivalence through the full
 eval_intervals path (candidates, window cut, freq fold, accumulation order)
-against the faithful per-doc iterators (search/intervals.py), which are
-themselves golden- and brute-force-tested in test_intervals.py.
+against the faithful per-doc iterators (search/intervals.py, driven by
+_intervals_per_doc over uncut candidates), which are themselves golden- and
+brute-force-tested in test_intervals.py.
 """
 
 from __future__ import annotations
@@ -16,50 +17,23 @@ import random
 import numpy as np
 import pytest
 
-from lucene_7_x_9_x_spark.functions import bm25, smallfloat
-from lucene_7_x_9_x_spark.functions.codecs import encode_posting_list
+from lucene_7_x_9_x_spark.functions import bm25
 from lucene_7_x_9_x_spark.search import kernel as K
 from lucene_7_x_9_x_spark.search import query as Q
+from tests.stub_segment import segment_from_tokens
 
 TERMS = ["a", "b", "c", "d"]
 
 
-def _segment(docs_tokens):
-    postings, norms = {}, {}
-    for docid, toks in docs_tokens.items():
-        norms[docid] = int(smallfloat.int_to_byte4([len(toks)])[0])
-        per = {}
-        for pos, t in enumerate(toks):
-            per.setdefault(t, []).append(pos)
-        for t, ps in per.items():
-            postings.setdefault(t, []).append((docid, len(ps), ps))
-    rows, gdf = {}, {}
-    for t, lst in postings.items():
-        lst.sort()
-        d = np.array([x[0] for x in lst], dtype=np.int64)
-        f = np.array([x[1] for x in lst], dtype=np.int64)
-        nb = np.array([norms[x[0]] for x in lst], dtype=np.uint8)
-        ps = [np.array(x[2], dtype=np.int64) for x in lst]
-        rows[t] = {"df": int(d.size), "ttf": int(f.sum()),
-                   "blocks": encode_posting_list(d, f, nb, ps)}
-        gdf[t] = int(d.size)
-    return K.SegmentIndex(rows, max(docs_tokens) + 1), gdf
-
-
-def _run(docs_tokens, src, dtype, vectorized):
-    seg, gdf = _segment(docs_tokens)
-    sc = K.Scorer(seg, bm25.BM25Stats(len(docs_tokens),
-                                      40 * len(docs_tokens), dtype=dtype),
-                  gdf)
-    sc.dtype = dtype
-    sc.interval_kterm_vectorized = vectorized
-    d, f = sc.eval_intervals(Q.IntervalQuery(source=src))
-    return dict(zip(d.tolist(), f.tolist()))
-
-
 def _check(docs_tokens, src, dtype=np.float64):
-    got = _run(docs_tokens, src, dtype, True)
-    want = _run(docs_tokens, src, dtype, False)
+    seg, gdf = segment_from_tokens(docs_tokens)
+    n = len(docs_tokens)
+    sc = K.Scorer(seg, bm25.BM25Stats(n, 40 * n, dtype=dtype), gdf)
+    sc.dtype = dtype
+    got = dict(zip(*(x.tolist() for x in
+                     sc.eval_intervals(Q.IntervalQuery(source=src)))))
+    want = dict(zip(*(x.tolist() for x in sc._intervals_per_doc(
+        src, sc._interval_candidates(src)))))
     assert got == want, (docs_tokens, src, got, want)
 
 

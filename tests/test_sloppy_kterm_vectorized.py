@@ -1,14 +1,15 @@
 """Differential proof: the vectorized k-term sloppy walk == faithful matcher.
 
 kernel._sloppy_counts_kterm claims the greedy of SloppyPhraseMatcher.java
-(ported faithfully in search/sloppy.py) collapses, for k >= 3 distinct
+(ported faithfully in search/sloppy.py) collapses, for k >= 2 distinct
 single-term PhrasePositions, to a k-stream leapfrog: pop the least phrase
 position, jump it past the second-least, emit end - (last position <= the
 second-least) when within slop. These tests pin the equivalence exhaustively
 on a small 3-term position universe (every disjoint triple of subsets, every
 slop — covers all tie/exhaustion orders) and on randomized k in 3..5 with
 OVERLAPPING phrase-position streams (terms at distinct token slots still
-collide after the -offset shift), in float64 and float32, multi-doc.
+collide after the -offset shift), in float64 and float32, multi-doc. The
+k=2 cases live in test_sloppy_vectorized.py and share ``check_sloppy``.
 
 No Spark: the kernel path is exercised through a stub segment.
 """
@@ -21,45 +22,34 @@ import random
 import numpy as np
 import pytest
 
+from lucene_7_x_9_x_spark.functions import bm25
+from lucene_7_x_9_x_spark.search import kernel as K
+from lucene_7_x_9_x_spark.search import query as Q
 from lucene_7_x_9_x_spark.search.kernel import Scorer
 from lucene_7_x_9_x_spark.search.sloppy import SloppyPhraseMatcher
+from tests.stub_segment import (FlatStubSeg, segment_from_tokens,
+                                sloppy_reference)
 
 TERMS = [f"t{j}" for j in range(8)]
 
 
-class _StubSeg:
-    """flat_positions-only segment stub: docs -> {term: sorted positions}."""
-
-    def __init__(self, docs: dict):
-        self.docs = docs
-
-    def flat_positions(self, term):
-        dd, pp = [], []
-        for doc in sorted(self.docs):
-            ps = self.docs[doc].get(term, ())
-            dd.extend([doc] * len(ps))
-            pp.extend(ps)
-        return (np.asarray(dd, dtype=np.int64),
-                np.asarray(pp, dtype=np.int64))
-
-
-def _vectorized(docs: dict, slop: int, k: int, dtype):
+def _vectorized(docs: dict, slop: int, terms, dtype):
     sc = object.__new__(Scorer)
-    sc.seg = _StubSeg(docs)
+    sc.seg = FlatStubSeg(docs)
     sc.dtype = dtype
-    terms = TERMS[:k]
     cand = np.asarray(
         [d for d in sorted(docs) if all(docs[d].get(t) for t in terms)],
         dtype=np.int64)
     if cand.size == 0:
         return {}
-    d, f = sc._sloppy_counts_kterm(cand, slop, terms)
+    d, f = sc._sloppy_counts_kterm(
+        cand, slop, [sc.seg.flat_positions(t) for t in terms])
     return dict(zip(d.tolist(), f.tolist()))
 
 
-def _faithful(docs: dict, slop: int, k: int, dtype):
+def _faithful(docs: dict, slop: int, terms, dtype):
     acc_dt = np.float32 if dtype == np.float32 else np.float64
-    terms = TERMS[:k]
+    k = len(terms)
     out = {}
     for doc in sorted(docs):
         pls = [docs[doc].get(t) for t in terms]
@@ -73,13 +63,19 @@ def _faithful(docs: dict, slop: int, k: int, dtype):
     return out
 
 
-def _check(docs: dict, slop: int, k: int, dtype=np.float64):
-    got = _vectorized(docs, slop, k, dtype)
-    want = _faithful(docs, slop, k, dtype)
+def check_sloppy(docs: dict, slop: int, terms, dtype=np.float64):
+    """The walk over docs {docid: {term: positions}} equals the faithful
+    matcher per doc, bit for bit, in ``dtype`` accumulation."""
+    got = _vectorized(docs, slop, terms, dtype)
+    want = _faithful(docs, slop, terms, dtype)
     assert got.keys() == want.keys(), (docs, slop, got, want)
     for key in want:
         # identical accumulation order and dtype -> bit-equal
         assert got[key] == want[key], (docs, slop, key, got[key], want[key])
+
+
+def _check(docs: dict, slop: int, k: int, dtype=np.float64):
+    check_sloppy(docs, slop, TERMS[:k], dtype)
 
 
 def test_exhaustive_small_universe_3term():
@@ -134,95 +130,41 @@ def test_dense_collision_heavy():
 
 
 def test_through_phrase_freqs_route():
-    """End-to-end via the Scorer routing (gates: k>=3, distinct terms)."""
-    from lucene_7_x_9_x_spark.functions import bm25, smallfloat
-    from lucene_7_x_9_x_spark.functions.codecs import encode_posting_list
-    from lucene_7_x_9_x_spark.search import kernel as K
-    from lucene_7_x_9_x_spark.search import query as Q
-
-    docs_tokens = {
+    """End-to-end via the Scorer routing (window cut, then the walk for
+    distinct terms) against the faithful matcher over uncut candidates."""
+    seg, gdf = segment_from_tokens({
         0: ["a", "x", "b", "c", "x", "a", "b", "x", "c"],
         1: ["c", "b", "a", "x", "a", "b", "c"],
         2: ["a", "b", "x", "x", "x", "x", "c"],
         3: ["a", "b"],
-    }
-    postings, norms = {}, {}
-    for docid, toks in docs_tokens.items():
-        norms[docid] = int(smallfloat.int_to_byte4([len(toks)])[0])
-        per = {}
-        for pos, t in enumerate(toks):
-            per.setdefault(t, []).append(pos)
-        for t, ps in per.items():
-            postings.setdefault(t, []).append((docid, len(ps), ps))
-    rows, gdf = {}, {}
-    for t, lst in postings.items():
-        lst.sort()
-        d = np.array([x[0] for x in lst], dtype=np.int64)
-        f = np.array([x[1] for x in lst], dtype=np.int64)
-        nb = np.array([norms[x[0]] for x in lst], dtype=np.uint8)
-        ps = [np.array(x[2], dtype=np.int64) for x in lst]
-        rows[t] = {"df": int(d.size), "ttf": int(f.sum()),
-                   "blocks": encode_posting_list(d, f, nb, ps)}
-        gdf[t] = int(d.size)
-    seg = K.SegmentIndex(rows, max(docs_tokens) + 1)
-    for slop in (1, 2, 3, 6):
-        q = Q.PhraseQuery(("a", "b", "c"), slop=slop)
-        res = {}
-        for vec in (True, False):
+    })
+    for terms in (("a", "b", "c"), ("a", "b"), ("c", "a")):
+        for slop in (1, 2, 3, 6):
+            q = Q.PhraseQuery(terms, slop=slop)
             sc = K.Scorer(seg, bm25.BM25Stats(4, 30, dtype=np.float32), gdf)
             sc.dtype = np.float32
-            sc.sloppy_kterm_vectorized = vec
-            d, f = sc._phrase_freqs(q)
-            res[vec] = dict(zip(d.tolist(), f.tolist()))
-        assert res[True] == res[False], (slop, res)
+            got = dict(zip(*(x.tolist() for x in sc._phrase_freqs(q))))
+            want = dict(zip(*(x.tolist() for x in sloppy_reference(sc, q))))
+            assert got == want, (terms, slop, got, want)
 
 
 def test_multiphrase_union_slots_route():
     """MultiPhraseQuery with no term repeated across slots routes through
     the k-stream walk over unioned slot streams — must equal the faithful
     per-doc matcher (which unions the same lists)."""
-    from lucene_7_x_9_x_spark.functions import bm25, smallfloat
-    from lucene_7_x_9_x_spark.functions.codecs import encode_posting_list
-    from lucene_7_x_9_x_spark.search import kernel as K
-    from lucene_7_x_9_x_spark.search import query as Q
-
     rng = random.Random(4242)
-    docs_tokens = {}
     vocab = ["a1", "a2", "b1", "c1", "c2", "x", "y", "z"]
-    for doc in range(12):
-        docs_tokens[doc] = [rng.choice(vocab) for _ in range(30)]
-    postings, norms = {}, {}
-    for docid, toks in docs_tokens.items():
-        norms[docid] = int(smallfloat.int_to_byte4([len(toks)])[0])
-        per = {}
-        for pos, t in enumerate(toks):
-            per.setdefault(t, []).append(pos)
-        for t, ps in per.items():
-            postings.setdefault(t, []).append((docid, len(ps), ps))
-    rows, gdf = {}, {}
-    for t, lst in postings.items():
-        lst.sort()
-        d = np.array([x[0] for x in lst], dtype=np.int64)
-        f = np.array([x[1] for x in lst], dtype=np.int64)
-        nb = np.array([norms[x[0]] for x in lst], dtype=np.uint8)
-        ps = [np.array(x[2], dtype=np.int64) for x in lst]
-        rows[t] = {"df": int(d.size), "ttf": int(f.sum()),
-                   "blocks": encode_posting_list(d, f, nb, ps)}
-        gdf[t] = int(d.size)
-    seg = K.SegmentIndex(rows, len(docs_tokens))
+    seg, gdf = segment_from_tokens(
+        {doc: [rng.choice(vocab) for _ in range(30)] for doc in range(12)})
     for slots in ((("a1", "a2"), ("b1",), ("c1", "c2")),
                   (("a1",), ("b1", "c2")),
                   (("a1", "x"), ("b1", "y"), ("c1",), ("z",))):
-        for slop in (0, 1, 2, 4, 9):
-            if slop == 0:
-                continue  # exact path is shared; walk only runs slop > 0
+        for slop in (1, 2, 4, 9):  # the exact path (slop 0) is not a walk
             q = Q.MultiPhraseQuery(slots, slop=slop)
-            res = {}
-            for vec in (True, False):
-                sc = K.Scorer(seg, bm25.BM25Stats(12, 360,
-                                                  dtype=np.float32), gdf)
-                sc.dtype = np.float32
-                sc.sloppy_kterm_vectorized = vec
-                d, f = sc._multi_phrase_freqs(q)
-                res[vec] = dict(zip(d.tolist(), f.tolist()))
-            assert res[True] == res[False], (slots, slop, res)
+            sc = K.Scorer(seg, bm25.BM25Stats(12, 360, dtype=np.float32),
+                          gdf)
+            sc.dtype = np.float32
+            got = dict(zip(*(x.tolist()
+                             for x in sc._multi_phrase_freqs(q))))
+            want = dict(zip(*(x.tolist() for x in sloppy_reference(sc, q))))
+            assert got == want, (slots, slop, got, want)

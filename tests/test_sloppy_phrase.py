@@ -153,31 +153,18 @@ def test_multi_term_slots_hidden_collision():
     assert f3 == 0.0
 
 
-def test_multiphrase_sloppy_end_to_end(tmp_path):
-    """MultiPhraseQuery slop>0 routes through the faithful matcher with
-    multi-term pps (kernel._sloppy_counts with slot tuples)."""
-    from lucene_7_x_9_x_spark.functions import bm25, codecs, smallfloat
+def test_multiphrase_sloppy_end_to_end():
+    """MultiPhraseQuery slop>0 with multi-term slots (no term repeated
+    across slots) runs the k-stream walk over each slot's union stream."""
+    from lucene_7_x_9_x_spark.functions import bm25
     from lucene_7_x_9_x_spark.search import kernel as K
     from lucene_7_x_9_x_spark.search import query as Q
+    from tests.stub_segment import segment_from_tokens
 
     docs_text = {0: "fast x sort", 1: "slow sort", 2: "sort fast", 3: "x y z"}
-    terms: dict = {}
-    norms = np.zeros(4, dtype=np.uint8)
-    for did, txt in docs_text.items():
-        toks = txt.split()
-        norms[did] = smallfloat.int_to_byte4(np.array([len(toks)]))[0]
-        for p, t in enumerate(toks):
-            terms.setdefault(t, {}).setdefault(did, []).append(p)
-    rows = {}
-    for t, occ in terms.items():
-        dd = np.array(sorted(occ), dtype=np.int64)
-        ff = np.array([len(occ[d]) for d in dd], dtype=np.int64)
-        pos = [np.array(occ[d], dtype=np.int64) for d in dd]
-        rows[t] = {"df": len(dd), "ttf": int(ff.sum()),
-                   "blocks": codecs.encode_posting_list(dd, ff, norms[dd], pos)}
-    seg = K.SegmentIndex(rows, 4)
-    stats = bm25.BM25Stats(4, 10, dtype=np.float64)
-    sc = K.Scorer(seg, stats, {t: len(v) for t, v in terms.items()})
+    seg, gdf = segment_from_tokens(
+        {did: txt.split() for did, txt in docs_text.items()})
+    sc = K.Scorer(seg, bm25.BM25Stats(4, 10, dtype=np.float64), gdf)
     q = Q.MultiPhraseQuery((("fast", "slow"), ("sort",)), slop=2)
     d, f = sc._multi_phrase_freqs(q)
     # doc 0 "fast x sort": matchLength 1 -> 1/2; doc 1 "slow sort": exact ->

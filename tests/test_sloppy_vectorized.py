@@ -1,11 +1,12 @@
-"""Differential proof: the vectorized 2-term sloppy walk == faithful matcher.
+"""Differential proof at k=2: the k-stream sloppy walk == faithful matcher.
 
-kernel._sloppy_counts_2term claims the greedy of SloppyPhraseMatcher.java
-(ported faithfully in search/sloppy.py) collapses, for exactly two distinct
-single-term PhrasePositions, to an alternating leapfrog walk. These tests pin
-that equivalence exhaustively on a small position universe (every subset pair,
-every slop — covers all tie/exhaustion orders) and on randomized large lists,
-in both float64 and float32 accumulation, single- and multi-doc.
+kernel._sloppy_counts_kterm runs every distinct-term sloppy phrase, the
+two-term one included. These are its k=2 cases, checked against the faithful
+SloppyPhraseMatcher (search/sloppy.py) exhaustively on a small position
+universe (every subset pair, every slop — covers all tie/exhaustion orders)
+and on randomized large lists, in both float64 and float32 accumulation,
+single- and multi-doc. The k >= 3 cases and the shared ``check_sloppy``
+live in test_sloppy_kterm_vectorized.py.
 
 No Spark: the kernel path is exercised through a stub segment.
 """
@@ -17,61 +18,11 @@ import itertools
 import numpy as np
 import pytest
 
-from lucene_7_x_9_x_spark.search.kernel import Scorer
-from lucene_7_x_9_x_spark.search.sloppy import SloppyPhraseMatcher
-
-
-class _StubSeg:
-    """flat_positions-only segment stub: docs -> {term: sorted positions}."""
-
-    def __init__(self, docs: dict):
-        self.docs = docs  # {docid: {term: [pos, ...]}}
-
-    def flat_positions(self, term):
-        dd, pp = [], []
-        for doc in sorted(self.docs):
-            ps = self.docs[doc].get(term, ())
-            dd.extend([doc] * len(ps))
-            pp.extend(ps)
-        return (np.asarray(dd, dtype=np.int64),
-                np.asarray(pp, dtype=np.int64))
-
-
-def _vectorized(docs: dict, slop: int, dtype):
-    sc = object.__new__(Scorer)
-    sc.seg = _StubSeg(docs)
-    sc.dtype = dtype
-    cand = np.asarray(
-        [d for d in sorted(docs) if docs[d].get("a") and docs[d].get("b")],
-        dtype=np.int64)
-    if cand.size == 0:
-        return {}
-    d, f = sc._sloppy_counts_2term(cand, slop, "a", "b")
-    return dict(zip(d.tolist(), f.tolist()))
-
-
-def _faithful(docs: dict, slop: int, dtype):
-    acc_dt = np.float32 if dtype == np.float32 else np.float64
-    out = {}
-    for doc in sorted(docs):
-        pa, pb = docs[doc].get("a"), docs[doc].get("b")
-        if not pa or not pb:
-            continue
-        m = SloppyPhraseMatcher([0, 1], [("a",), ("b",)], slop)
-        f = m.freq([np.asarray(pa, dtype=np.int64),
-                    np.asarray(pb, dtype=np.int64)], dtype=acc_dt)
-        if f > 0:
-            out[doc] = f
-    return out
+from tests.test_sloppy_kterm_vectorized import check_sloppy
 
 
 def _check(docs: dict, slop: int, dtype=np.float64):
-    got = _vectorized(docs, slop, dtype)
-    want = _faithful(docs, slop, dtype)
-    assert got.keys() == want.keys(), (docs, slop, got, want)
-    for k in want:
-        # identical accumulation order and dtype -> bit-equal
-        assert got[k] == want[k], (docs, slop, k, got[k], want[k])
+    check_sloppy(docs, slop, ["a", "b"], dtype)
 
 
 def test_exhaustive_small_universe():

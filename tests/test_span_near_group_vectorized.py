@@ -1,15 +1,16 @@
 """Differential proof: vectorized NearSpans over Or-of-term clauses ==
 faithful matchers.
 
-kernel extends the 2-term/k-term near walks to clauses that are SpanOr over
-term leaves (the SpanMultiTermQueryWrapper-inside-Near shape): a clause's
+kernel extends the near walk (_near_kterm_stream) to clauses that are SpanOr
+over term leaves (the SpanMultiTermQueryWrapper-inside-Near shape): a clause's
 emission stream becomes the key-sorted union of its member terms' positions.
 All member spans have end = start + 1, so the union keeps the monotone-ends
 property both closed forms rely on; (start, end, clause-ord) queue ties only
 reorder IDENTICAL spans, which cannot change emission values. Exhaustive
 small-universe + randomized group shapes, ordered and unordered, float64 and
 float32, including same-position duplicates (synonym-stacked postings), all
-through the full eval_spans path.
+through the full eval_spans path against the faithful per-doc matchers
+(_spans_per_doc) over uncut candidates.
 """
 
 from __future__ import annotations
@@ -20,44 +21,24 @@ import random
 import numpy as np
 import pytest
 
-from lucene_7_x_9_x_spark.functions import bm25, smallfloat
-from lucene_7_x_9_x_spark.functions.codecs import encode_posting_list
+from lucene_7_x_9_x_spark.functions import bm25
 from lucene_7_x_9_x_spark.search import kernel as K
 from lucene_7_x_9_x_spark.search import query as Q
+from tests.stub_segment import segment_from_positions
 
 TERMS = [f"t{j}" for j in range(8)]
 
 
-def _segment_from_positions(per_doc_term_positions, doclens):
-    """per_doc_term_positions: {docid: {term: [positions]}} — positions MAY
-    overlap across terms (synonym-stacked injection)."""
-    postings = {}
-    norms = {d: int(smallfloat.int_to_byte4([n])[0])
-             for d, n in doclens.items()}
-    for docid, tp in per_doc_term_positions.items():
-        for t, ps in tp.items():
-            if ps:
-                postings.setdefault(t, []).append((docid, len(ps),
-                                                   sorted(ps)))
-    rows, gdf = {}, {}
-    for t, lst in postings.items():
-        lst.sort()
-        d = np.array([x[0] for x in lst], dtype=np.int64)
-        f = np.array([x[1] for x in lst], dtype=np.int64)
-        nb = np.array([norms[x[0]] for x in lst], dtype=np.uint8)
-        ps = [np.array(x[2], dtype=np.int64) for x in lst]
-        rows[t] = {"df": int(d.size), "ttf": int(f.sum()),
-                   "blocks": encode_posting_list(d, f, nb, ps)}
-        gdf[t] = int(d.size)
-    return K.SegmentIndex(rows, max(per_doc_term_positions) + 1), gdf
+def _reference(sc, q):
+    return dict(zip(*(x.tolist() for x in
+                      sc._spans_per_doc(q, sc._span_candidates(q)))))
 
 
-def _run(per_doc, doclens, groups, slop, in_order, dtype, vectorized):
-    seg, gdf = _segment_from_positions(per_doc, doclens)
+def _check(per_doc, doclens, groups, slop, in_order, dtype=np.float64):
+    seg, gdf = segment_from_positions(per_doc, doclens)
     n = len(per_doc)
     sc = K.Scorer(seg, bm25.BM25Stats(n, 40 * n, dtype=dtype), gdf)
     sc.dtype = dtype
-    sc.span_near_group_vectorized = vectorized
 
     def clause(g):
         if len(g) == 1:
@@ -66,16 +47,10 @@ def _run(per_doc, doclens, groups, slop, in_order, dtype, vectorized):
 
     q = Q.SpanNearQuery(tuple(clause(g) for g in groups),
                         slop=slop, in_order=in_order)
-    if vectorized:
-        assert sc._span_vec_ok(q), ("group shape must ride the "
-                                    "vectorized algebra", groups)
-    d, f = sc.eval_spans(q)
-    return dict(zip(d.tolist(), f.tolist()))
-
-
-def _check(per_doc, doclens, groups, slop, in_order, dtype=np.float64):
-    got = _run(per_doc, doclens, groups, slop, in_order, dtype, True)
-    want = _run(per_doc, doclens, groups, slop, in_order, dtype, False)
+    assert sc._span_vec_ok(q), ("group shape must ride the "
+                                "vectorized algebra", groups)
+    got = dict(zip(*(x.tolist() for x in sc.eval_spans(q))))
+    want = _reference(sc, q)
     assert got == want, (per_doc, groups, slop, in_order, got, want)
 
 
@@ -147,21 +122,21 @@ def test_gate_refuses_shared_terms_across_groups():
     """A term appearing in two clauses falls back to the faithful per-doc
     matcher (the walks assume disjoint streams)."""
     per_doc = {0: {"t0": [0, 3], "t1": [1], "t2": [2]}}
-    seg, gdf = _segment_from_positions(per_doc, {0: 6})
+    seg, gdf = segment_from_positions(per_doc, {0: 6})
     sc = K.Scorer(seg, bm25.BM25Stats(1, 40, dtype=np.float64), gdf)
     q = Q.SpanNearQuery(
         (Q.SpanOrQuery((Q.SpanTermQuery("t0"), Q.SpanTermQuery("t1"))),
          Q.SpanTermQuery("t0")), slop=3, in_order=True)
     assert not sc._span_vec_ok(q)
     d, f = sc.eval_spans(q)  # still answers through the faithful path
-    assert d.size >= 0
+    assert dict(zip(d.tolist(), f.tolist())) == _reference(sc, q)
 
 
 def test_nested_or_flattens():
     """Near([Or(Or(t0, t1), t2), t3]) rides the vectorized walk (nested Or
     flattens to one merged stream) and equals the faithful per-doc result."""
     per_doc = {0: {"t0": [0], "t1": [2], "t2": [4], "t3": [1, 3, 5]}}
-    seg, gdf = _segment_from_positions(per_doc, {0: 6})
+    seg, gdf = segment_from_positions(per_doc, {0: 6})
     sc = K.Scorer(seg, bm25.BM25Stats(1, 40, dtype=np.float64), gdf)
     inner = Q.SpanOrQuery((Q.SpanTermQuery("t0"), Q.SpanTermQuery("t1")))
     outer = Q.SpanOrQuery((inner, Q.SpanTermQuery("t2")))
@@ -171,9 +146,4 @@ def test_nested_or_flattens():
                                 slop=slop, in_order=in_order)
             assert sc._span_vec_ok(q)
             d, f = sc.eval_spans(q)
-            sc2 = K.Scorer(seg, bm25.BM25Stats(1, 40, dtype=np.float64),
-                           gdf)
-            sc2.span_near_group_vectorized = False
-            d2, f2 = sc2.eval_spans(q)
-            assert dict(zip(d.tolist(), f.tolist())) == \
-                dict(zip(d2.tolist(), f2.tolist()))
+            assert dict(zip(d.tolist(), f.tolist())) == _reference(sc, q)

@@ -1,12 +1,14 @@
 """Differential proof: vectorized k-term NearSpans == faithful matchers.
 
-kernel._near_kterm_stream claims NearSpansOrdered collapses, for k >= 3
+kernel._near_kterm_stream claims NearSpansOrdered collapses, for k >= 2
 distinct single-term clauses, to a chained first-landing-spot searchsorted
 (monotone pointers == independent per-start chains), and the unordered
 window queue to merged-pop-order emissions cut at the doc's earliest clause
 exhaustion event. Exhaustive 3-term small-universe + randomized k in 3..5,
 ordered and unordered, float64 and float32, through the full eval_spans path
-(candidates, window cut, accumulation order, freq fold included).
+(candidates, window cut, accumulation order, freq fold included) against
+the faithful per-doc matchers (_spans_per_doc) over uncut candidates. The
+k=2 cases live in test_span_near_vectorized.py and share ``check_near``.
 """
 
 from __future__ import annotations
@@ -17,66 +19,32 @@ import random
 import numpy as np
 import pytest
 
-from lucene_7_x_9_x_spark.functions import bm25, smallfloat
-from lucene_7_x_9_x_spark.functions.codecs import encode_posting_list
+from lucene_7_x_9_x_spark.functions import bm25
 from lucene_7_x_9_x_spark.search import kernel as K
 from lucene_7_x_9_x_spark.search import query as Q
+from tests.stub_segment import lengths_of, segment_from_positions
 
 TERMS = [f"t{j}" for j in range(8)]
 
 
-def _segment(docs_tokens):
-    postings, norms = {}, {}
-    for docid, toks in docs_tokens.items():
-        norms[docid] = int(smallfloat.int_to_byte4([len(toks)])[0])
-        per = {}
-        for pos, t in enumerate(toks):
-            per.setdefault(t, []).append(pos)
-        for t, ps in per.items():
-            postings.setdefault(t, []).append((docid, len(ps), ps))
-    rows, gdf = {}, {}
-    for t, lst in postings.items():
-        lst.sort()
-        d = np.array([x[0] for x in lst], dtype=np.int64)
-        f = np.array([x[1] for x in lst], dtype=np.int64)
-        nb = np.array([norms[x[0]] for x in lst], dtype=np.uint8)
-        ps = [np.array(x[2], dtype=np.int64) for x in lst]
-        rows[t] = {"df": int(d.size), "ttf": int(f.sum()),
-                   "blocks": encode_posting_list(d, f, nb, ps)}
-        gdf[t] = int(d.size)
-    return K.SegmentIndex(rows, max(docs_tokens) + 1), gdf
-
-
-def _docs_from_positions(per_doc, k):
-    """per_doc: {docid: [positions_of_t0, ..., positions_of_tk-1]}."""
-    docs = {}
-    for docid, pls in per_doc.items():
-        n = max((p for ps in pls for p in ps), default=0) + 1
-        toks = [f"f{i}" for i in range(n)]
-        for j, ps in enumerate(pls):
-            for p in ps:
-                toks[p] = TERMS[j]
-        docs[docid] = toks
-    return docs
-
-
-def _run(per_doc, k, slop, in_order, dtype, vectorized):
-    docs = _docs_from_positions(per_doc, k)
-    seg, gdf = _segment(docs)
-    sc = K.Scorer(seg, bm25.BM25Stats(len(docs), 40 * len(docs),
-                                      dtype=dtype), gdf)
+def check_near(per_doc, k, slop, in_order, dtype=np.float64):
+    """per_doc: {docid: [positions_of_t0, ..., positions_of_tk-1]}. The
+    engine's eval_spans equals the per-doc reference over uncut candidates,
+    bit for bit, in ``dtype`` accumulation."""
+    tp = {doc: dict(zip(TERMS, pls)) for doc, pls in per_doc.items()}
+    seg, gdf = segment_from_positions(tp, lengths_of(tp))
+    sc = K.Scorer(seg, bm25.BM25Stats(len(tp), 40 * len(tp), dtype=dtype),
+                  gdf)
     sc.dtype = dtype
-    sc.span_near_kterm_vectorized = vectorized
     q = Q.SpanNearQuery(tuple(Q.SpanTermQuery(t) for t in TERMS[:k]),
                         slop=slop, in_order=in_order)
-    d, f = sc.eval_spans(q)
-    return dict(zip(d.tolist(), f.tolist()))
-
-
-def _check(per_doc, k, slop, in_order, dtype=np.float64):
-    got = _run(per_doc, k, slop, in_order, dtype, True)
-    want = _run(per_doc, k, slop, in_order, dtype, False)
+    got = dict(zip(*(x.tolist() for x in sc.eval_spans(q))))
+    want = dict(zip(*(x.tolist() for x in
+                      sc._spans_per_doc(q, sc._span_candidates(q)))))
     assert got == want, (per_doc, k, slop, in_order, got, want)
+
+
+_check = check_near
 
 
 def test_exhaustive_small_universe_3term():

@@ -1,10 +1,12 @@
-"""Differential proof: vectorized 2-term NearSpans == faithful matchers.
+"""Differential proof at k=2: vectorized NearSpans == faithful matchers.
 
-kernel._near_2term_stream claims both NearSpansOrdered and the unordered
-window queue collapse, for two distinct single-term clauses, to closed forms
-over the two position streams. Exhaustive small-universe + randomized
-corpora, ordered and unordered, float64 and float32, through the full
-eval_spans path (candidates, accumulation order, freq fold included).
+kernel._near_kterm_stream runs every flattenable SpanNearQuery, the
+two-clause one included. These are its k=2 cases: exhaustive small-universe
++ randomized corpora, ordered and unordered, float64 and float32, through
+the full eval_spans path (candidates, window cut, accumulation order, freq
+fold included) against the faithful per-doc matchers (_spans_per_doc) over
+uncut candidates. ``check_near`` is shared with the k >= 3 cases in
+test_span_near_kterm_vectorized.py.
 """
 
 from __future__ import annotations
@@ -14,65 +16,16 @@ import itertools
 import numpy as np
 import pytest
 
-from lucene_7_x_9_x_spark.functions import bm25, smallfloat
-from lucene_7_x_9_x_spark.functions.codecs import encode_posting_list
+from lucene_7_x_9_x_spark.functions import bm25
 from lucene_7_x_9_x_spark.search import kernel as K
 from lucene_7_x_9_x_spark.search import query as Q
-
-
-def _segment(docs_tokens):
-    postings, norms = {}, {}
-    for docid, toks in docs_tokens.items():
-        norms[docid] = int(smallfloat.int_to_byte4([len(toks)])[0])
-        per = {}
-        for pos, t in enumerate(toks):
-            per.setdefault(t, []).append(pos)
-        for t, ps in per.items():
-            postings.setdefault(t, []).append((docid, len(ps), ps))
-    rows, gdf = {}, {}
-    for t, lst in postings.items():
-        lst.sort()
-        d = np.array([x[0] for x in lst], dtype=np.int64)
-        f = np.array([x[1] for x in lst], dtype=np.int64)
-        nb = np.array([norms[x[0]] for x in lst], dtype=np.uint8)
-        ps = [np.array(x[2], dtype=np.int64) for x in lst]
-        rows[t] = {"df": int(d.size), "ttf": int(f.sum()),
-                   "blocks": encode_posting_list(d, f, nb, ps)}
-        gdf[t] = int(d.size)
-    return K.SegmentIndex(rows, max(docs_tokens) + 1), gdf
-
-
-def _docs_from_positions(per_doc):
-    """per_doc: {docid: (positions_of_a, positions_of_b)} -> token lists."""
-    docs = {}
-    for docid, (pa, pb) in per_doc.items():
-        n = max(list(pa) + list(pb), default=0) + 1
-        toks = [f"f{i}" for i in range(n)]  # unique fillers, never match
-        for p in pa:
-            toks[p] = "a"
-        for p in pb:
-            toks[p] = "b"
-        docs[docid] = toks
-    return docs
-
-
-def _run(per_doc, slop, in_order, dtype, vectorized):
-    docs = _docs_from_positions(per_doc)
-    seg, gdf = _segment(docs)
-    sc = K.Scorer(seg, bm25.BM25Stats(len(docs), 40 * len(docs),
-                                      dtype=dtype), gdf)
-    sc.dtype = dtype
-    sc.span_near_2term_vectorized = vectorized
-    q = Q.SpanNearQuery((Q.SpanTermQuery("a"), Q.SpanTermQuery("b")),
-                        slop=slop, in_order=in_order)
-    d, f = sc.eval_spans(q)
-    return dict(zip(d.tolist(), f.tolist()))
+from tests.stub_segment import segment_from_tokens
+from tests.test_span_near_kterm_vectorized import check_near
 
 
 def _check(per_doc, slop, in_order, dtype=np.float64):
-    got = _run(per_doc, slop, in_order, dtype, True)
-    want = _run(per_doc, slop, in_order, dtype, False)
-    assert got == want, (per_doc, slop, in_order, got, want)
+    """per_doc: {docid: (positions_of_t0, positions_of_t1)}."""
+    check_near(per_doc, 2, slop, in_order, dtype)
 
 
 def test_exhaustive_small_universe():
@@ -107,16 +60,17 @@ def test_randomized_multi_doc(seed):
 
 
 def test_fallback_paths_still_used():
-    """Same-term clauses and 3-clause queries keep the faithful matcher."""
-    per_doc = {0: ([0, 2], [1, 3])}
-    docs = _docs_from_positions(per_doc)
-    seg, gdf = _segment(docs)
-    sc = K.Scorer(seg, bm25.BM25Stats(1, 40, dtype=np.float64), gdf)
-    q_same = Q.SpanNearQuery((Q.SpanTermQuery("a"), Q.SpanTermQuery("a")),
-                             slop=2, in_order=True)
-    d, f = sc.eval_spans(q_same)  # must not raise; faithful path
-    assert d.size >= 0
-    q3 = Q.SpanNearQuery((Q.SpanTermQuery("a"), Q.SpanTermQuery("b"),
-                          Q.SpanTermQuery("a")), slop=4, in_order=True)
-    d3, _ = sc.eval_spans(q3)
-    assert d3.size >= 0
+    """A term shared between clauses keeps the faithful per-doc matcher,
+    at two and at three clauses, and the engine still equals it."""
+    seg, gdf = segment_from_tokens({0: ["a", "b", "a", "b"],
+                                    1: ["a", "x", "x", "a", "b"]})
+    sc = K.Scorer(seg, bm25.BM25Stats(2, 40, dtype=np.float64), gdf)
+    for clauses in (("a", "a"), ("a", "b", "a")):
+        for in_order in (True, False):
+            q = Q.SpanNearQuery(tuple(Q.SpanTermQuery(t) for t in clauses),
+                                slop=4, in_order=in_order)
+            assert not sc._span_vec_ok(q)
+            got = dict(zip(*(x.tolist() for x in sc.eval_spans(q))))
+            want = dict(zip(*(x.tolist() for x in
+                              sc._spans_per_doc(q, sc._span_candidates(q)))))
+            assert got == want, (clauses, in_order, got, want)

@@ -1,59 +1,37 @@
 """Vectorized candidate cut before the per-doc span/sloppy matchers.
 
-Soundness: the pair-window cut is a NECESSARY condition, so results with the
-prefilter must equal results without it (differential, seeded random docs).
-Effectiveness: per-doc matcher invocations drop on corpora where terms
-co-occur in docs but never close enough — the exact scenario the cut targets.
+Soundness: the pair-window cut is a NECESSARY condition, so the engine's
+results must equal the faithful per-doc references run over UNCUT candidates
+(differential, seeded random docs). Effectiveness: per-doc matcher
+invocations drop on corpora where terms co-occur in docs but never close
+enough — the exact scenario the cut targets. Only repeated-term shapes still
+reach the per-doc matchers (distinct-term shapes run the vectorized walks),
+so the effectiveness checks use "alpha beta alpha".
 """
 
 import numpy as np
 import pytest
 
-from lucene_7_x_9_x_spark.functions.codecs import encode_posting_list
-from lucene_7_x_9_x_spark.functions import bm25, smallfloat
+from lucene_7_x_9_x_spark.functions import bm25
 from lucene_7_x_9_x_spark.search import kernel as K
 from lucene_7_x_9_x_spark.search import query as Q
-
-
-def _segment(docs_tokens):
-    """Build a SegmentIndex from {docid: [token,...]} (positions = index)."""
-    postings = {}
-    norms = {}
-    for docid, toks in docs_tokens.items():
-        norms[docid] = int(smallfloat.int_to_byte4([len(toks)])[0])
-        per = {}
-        for pos, t in enumerate(toks):
-            per.setdefault(t, []).append(pos)
-        for t, ps in per.items():
-            postings.setdefault(t, []).append((docid, len(ps), ps))
-    rows = {}
-    gdf = {}
-    for t, lst in postings.items():
-        lst.sort()
-        d = np.array([x[0] for x in lst], dtype=np.int64)
-        f = np.array([x[1] for x in lst], dtype=np.int64)
-        nb = np.array([norms[x[0]] for x in lst], dtype=np.uint8)
-        ps = [np.array(x[2], dtype=np.int64) for x in lst]
-        rows[t] = {"df": int(d.size), "ttf": int(f.sum()),
-                   "blocks": encode_posting_list(d, f, nb, ps)}
-        gdf[t] = int(d.size)
-    max_doc = max(docs_tokens) + 1
-    return K.SegmentIndex(rows, max_doc), gdf
+from lucene_7_x_9_x_spark.search import sloppy as SL
+from tests.stub_segment import segment_from_tokens, sloppy_reference
 
 
 @pytest.fixture(scope="module")
 def far_corpus():
-    """Docs where 'alpha' and 'beta' BOTH occur, but only some docs have
-    them within slop distance — plus seeded random filler."""
+    """Docs where 'alpha' occurs twice and 'beta' once, but only some docs
+    have beta between the alphas, within slop — plus seeded random filler."""
     rng = np.random.RandomState(7)
     docs = {}
     for i in range(200):
         toks = [f"w{rng.randint(30)}" for _ in range(40)]
-        toks[rng.randint(10)] = "alpha"
+        j = rng.randint(10)
+        toks[j] = toks[j + 4] = "alpha"
         if i % 3 == 0:
-            # close: beta right after some alpha
-            j = toks.index("alpha")
-            toks[min(j + 1 + rng.randint(2), 39)] = "beta"
+            # close: beta right after the first alpha
+            toks[j + 1 + rng.randint(2)] = "beta"
         else:
             toks[35 + rng.randint(5)] = "beta"  # far away
         docs[i] = toks
@@ -65,118 +43,86 @@ def _scorer(seg, gdf):
     return K.Scorer(seg, stats, gdf)
 
 
-def _run_both(q, far_corpus, count_attr):
-    seg1, gdf = _segment(far_corpus)
-    s1 = _scorer(seg1, gdf)
-    calls = {"on": 0, "off": 0}
-
-    orig = K.Scorer._doc_spans
-
-    def spy(self, qq, doc):
-        calls[mode] += 1
-        return orig(self, qq, doc)
-
-    K.Scorer._doc_spans = spy
-    try:
-        mode = "on"
-        s1.span_prefilter = True
-        # force the per-doc path: the cut's effectiveness is what's under
-        # test; 2-term near queries default to the vectorized walk
-        s1.span_near_2term_vectorized = False
-        d_on, f_on = (s1.eval_spans(q) if isinstance(q, Q.SpanQuery)
-                      else s1._phrase_freqs(q))
-        seg2, _ = _segment(far_corpus)
-        s2 = _scorer(seg2, gdf)
-        mode = "off"
-        s2.span_prefilter = False
-        s2.span_near_2term_vectorized = False
-        d_off, f_off = (s2.eval_spans(q) if isinstance(q, Q.SpanQuery)
-                        else s2._phrase_freqs(q))
-        if isinstance(q, Q.SpanQuery):
-            # the DEFAULT path (vectorized walk) must agree exactly
-            seg3, _ = _segment(far_corpus)
-            s3 = _scorer(seg3, gdf)
-            d_vec, f_vec = s3.eval_spans(q)
-            assert np.array_equal(d_vec, d_off)
-            assert np.allclose(f_vec, f_off)
-    finally:
-        K.Scorer._doc_spans = orig
-    assert np.array_equal(d_on, d_off)
-    assert np.allclose(f_on, f_off)
-    return d_on, calls
+def _engine(sc, q):
+    if isinstance(q, Q.SpanQuery):
+        return sc.eval_spans(q)
+    if isinstance(q, Q.MultiPhraseQuery):
+        return sc._multi_phrase_freqs(q)
+    return sc._phrase_freqs(q)
 
 
-def test_span_near_ordered_cut(far_corpus):
-    q = Q.SpanNearQuery((Q.SpanTermQuery("alpha"), Q.SpanTermQuery("beta")),
-                        slop=2, in_order=True)
-    d, calls = _run_both(q, far_corpus, "_doc_spans")
-    assert d.size > 0
-    # every doc has both terms, so without the cut the matcher visits ~200
-    # docs; with it, only near-co-occurrence docs survive
-    assert calls["on"] < calls["off"] / 2
+def _reference(sc, q):
+    if isinstance(q, Q.SpanQuery):
+        return sc._spans_per_doc(q, sc._span_candidates(q))
+    return sloppy_reference(sc, q)
 
 
-def test_span_near_unordered_cut(far_corpus):
-    q = Q.SpanNearQuery((Q.SpanTermQuery("alpha"), Q.SpanTermQuery("beta")),
-                        slop=3, in_order=False)
-    d, calls = _run_both(q, far_corpus, "_doc_spans")
-    assert d.size > 0
-    assert calls["on"] < calls["off"] / 2
-
-
-def test_sloppy_phrase_cut_differential(far_corpus):
-    """The window cut still halves matcher calls for the per-doc path (the
-    path >=3-clause / repeating-term phrases take); the 2-term query is
-    forced onto it by disabling the round-4 vectorized walk."""
-    from lucene_7_x_9_x_spark.search import sloppy as SL
-    q = Q.PhraseQuery(("alpha", "beta"), slop=2)
-    seg1, gdf = _segment(far_corpus)
-    s1 = _scorer(seg1, gdf)
-    s1.span_prefilter = True
-    s1.sloppy_2term_vectorized = False
+def _cut_vs_uncut(q, docs):
+    """(engine docids, matcher calls with the cut, matcher calls without):
+    the engine (cut, then per-doc) vs the uncut per-doc reference, each on
+    a fresh segment; results must agree."""
     calls = {"n": 0}
-    orig_freq = SL.SloppyPhraseMatcher.freq
+    orig_spans, orig_freq = K.Scorer._doc_spans, SL.SloppyPhraseMatcher.freq
 
-    def spy(self, plists, dtype=np.float32):
+    def spy_spans(self, qq, doc):
+        calls["n"] += 1
+        return orig_spans(self, qq, doc)
+
+    def spy_freq(self, plists, dtype=np.float32):
         calls["n"] += 1
         return orig_freq(self, plists, dtype=dtype)
 
-    SL.SloppyPhraseMatcher.freq = spy
+    K.Scorer._doc_spans = spy_spans
+    SL.SloppyPhraseMatcher.freq = spy_freq
     try:
-        d_on, f_on = s1._phrase_freqs(q)
-        n_on = calls["n"]
-        calls["n"] = 0
-        seg2, _ = _segment(far_corpus)
-        s2 = _scorer(seg2, gdf)
-        s2.span_prefilter = False
-        s2.sloppy_2term_vectorized = False
-        d_off, f_off = s2._phrase_freqs(q)
+        d_on, f_on = _engine(_scorer(*segment_from_tokens(docs)), q)
+        n_on, calls["n"] = calls["n"], 0
+        d_off, f_off = _reference(_scorer(*segment_from_tokens(docs)), q)
         n_off = calls["n"]
-        # the DEFAULT path is the vectorized walk: zero matcher calls,
-        # identical results
-        calls["n"] = 0
-        seg3, _ = _segment(far_corpus)
-        s3 = _scorer(seg3, gdf)
-        d_vec, f_vec = s3._phrase_freqs(q)
-        n_vec = calls["n"]
     finally:
+        K.Scorer._doc_spans = orig_spans
         SL.SloppyPhraseMatcher.freq = orig_freq
     assert np.array_equal(d_on, d_off)
-    assert np.allclose(f_on, f_off)
-    assert d_on.size > 0
+    assert np.array_equal(f_on, f_off)
+    return d_on, n_on, n_off
+
+
+def _alpha_beta_alpha_near(slop, in_order):
+    return Q.SpanNearQuery((Q.SpanTermQuery("alpha"), Q.SpanTermQuery("beta"),
+                            Q.SpanTermQuery("alpha")),
+                           slop=slop, in_order=in_order)
+
+
+def test_span_near_ordered_cut(far_corpus):
+    d, n_on, n_off = _cut_vs_uncut(_alpha_beta_alpha_near(2, True),
+                                   far_corpus)
+    assert d.size > 0
+    # every doc has both terms, so without the cut the matcher visits ~200
+    # docs; with it, only near-co-occurrence docs survive
     assert n_on < n_off / 2
-    assert n_vec == 0
-    assert np.array_equal(d_vec, d_off) and np.allclose(f_vec, f_off)
+
+
+def test_span_near_unordered_cut(far_corpus):
+    d, n_on, n_off = _cut_vs_uncut(_alpha_beta_alpha_near(3, False),
+                                   far_corpus)
+    assert d.size > 0
+    assert n_on < n_off / 2
+
+
+def test_sloppy_phrase_cut_differential(far_corpus):
+    """The window cut halves SloppyPhraseMatcher calls for the per-doc path
+    that repeated-term phrases take."""
+    q = Q.PhraseQuery(("alpha", "beta", "alpha"), slop=2)
+    d, n_on, n_off = _cut_vs_uncut(q, far_corpus)
+    assert d.size > 0
+    assert n_on < n_off / 2
 
 
 def test_random_differential_many_shapes():
     rng = np.random.RandomState(11)
     docs = {i: [f"t{rng.randint(8)}" for _ in range(rng.randint(3, 25))]
             for i in range(120)}
-    seg_a, gdf = _segment(docs)
-    seg_b, _ = _segment(docs)
-    sa, sb = _scorer(seg_a, gdf), _scorer(seg_b, gdf)
-    sa.span_prefilter, sb.span_prefilter = True, False
+    sc = _scorer(*segment_from_tokens(docs))
     shapes = [
         Q.SpanNearQuery((Q.SpanTermQuery("t0"), Q.SpanTermQuery("t1")),
                         slop=1, in_order=True),
@@ -184,22 +130,19 @@ def test_random_differential_many_shapes():
                          Q.SpanTermQuery("t2")), slop=4, in_order=True),
         Q.SpanNearQuery((Q.SpanTermQuery("t3"), Q.SpanTermQuery("t4")),
                         slop=2, in_order=False),
+        Q.SpanNearQuery((Q.SpanTermQuery("t3"), Q.SpanTermQuery("t4"),
+                         Q.SpanTermQuery("t3")), slop=3, in_order=False),
         Q.PhraseQuery(("t0", "t1"), slop=1),
         Q.PhraseQuery(("t2", "t0"), slop=3),
+        Q.PhraseQuery(("t2", "t0", "t2"), slop=3),
         Q.MultiPhraseQuery((("t0", "t1"), ("t2",)), slop=2),
+        Q.MultiPhraseQuery((("t0", "t1"), ("t1",)), slop=2),
     ]
     for q in shapes:
-        if isinstance(q, Q.SpanQuery):
-            da, fa = sa.eval_spans(q)
-            db, fb = sb.eval_spans(q)
-        elif isinstance(q, Q.MultiPhraseQuery):
-            da, fa = sa._multi_phrase_freqs(q)
-            db, fb = sb._multi_phrase_freqs(q)
-        else:
-            da, fa = sa._phrase_freqs(q)
-            db, fb = sb._phrase_freqs(q)
+        da, fa = _engine(sc, q)
+        db, fb = _reference(sc, q)
         assert np.array_equal(da, db), q
-        assert np.allclose(fa, fb), q
+        assert np.array_equal(fa, fb), q
 
 
 def test_unordered_kterm_cut_bound_is_slop_plus_k_minus_1():
@@ -212,19 +155,12 @@ def test_unordered_kterm_cut_bound_is_slop_plus_k_minus_1():
     the t1->t2 adjacent gap is |1-10| = 9 > slop+1 = 8."""
     docs = {0: ["f"] * 24}
     docs[0][5], docs[0][10], docs[0][1] = "t0", "t1", "t2"
-    seg, gdf = _segment(docs)
+    sc = _scorer(*segment_from_tokens(docs))
     q = Q.SpanNearQuery((Q.SpanTermQuery("t0"), Q.SpanTermQuery("t1"),
                          Q.SpanTermQuery("t2")), slop=7, in_order=False)
-
-    def run(prefilter, vectorized):
-        s = _scorer(*(_segment(docs)))
-        s.span_prefilter = prefilter
-        s.span_near_kterm_vectorized = vectorized
-        d, f = s.eval_spans(q)
-        return dict(zip(d.tolist(), f.tolist()))
-
-    truth = run(False, False)  # faithful, no cut: ground truth
+    cand = sc._span_candidates(q)
+    flats = [sc.seg.flat_positions(t) for t in ("t0", "t1", "t2")]
+    assert sc._near_window_cut(cand, flats, 7, False).tolist() == [0]
+    truth = dict(zip(*(x.tolist() for x in sc._spans_per_doc(q, cand))))
     assert truth, "the span must match without any prefilter"
-    assert run(True, False) == truth   # cut + faithful
-    assert run(True, True) == truth    # cut + vectorized walk
-    assert run(False, True) == truth   # vectorized, no cut
+    assert dict(zip(*(x.tolist() for x in sc.eval_spans(q)))) == truth

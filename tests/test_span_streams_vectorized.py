@@ -17,8 +17,8 @@ streams collapses to a closed form over composite (doc<<32)+pos keys:
 
 Exhaustive small-universe shapes + randomized deep trees, float64 and
 float32, through the full eval_spans path (candidates, fold order
-included); the baseline is the faithful per-doc _doc_spans walk with
-span_combinators_vectorized (and the Near closed forms) disabled.
+included); the baseline is the faithful per-doc _doc_spans walk
+(_spans_per_doc) over uncut candidates.
 """
 
 from __future__ import annotations
@@ -29,65 +29,24 @@ import random
 import numpy as np
 import pytest
 
-from lucene_7_x_9_x_spark.functions import bm25, smallfloat
-from lucene_7_x_9_x_spark.functions.codecs import encode_posting_list
+from lucene_7_x_9_x_spark.functions import bm25
 from lucene_7_x_9_x_spark.search import kernel as K
 from lucene_7_x_9_x_spark.search import query as Q
+from tests.stub_segment import lengths_of, segment_from_positions
 
 TERMS = [f"t{j}" for j in range(8)]
 
 
-def _segment(docs_tokens):
-    postings, norms = {}, {}
-    for docid, toks in docs_tokens.items():
-        norms[docid] = int(smallfloat.int_to_byte4([len(toks)])[0])
-        per = {}
-        for pos, t in enumerate(toks):
-            per.setdefault(t, []).append(pos)
-        for t, ps in per.items():
-            postings.setdefault(t, []).append((docid, len(ps), ps))
-    rows, gdf = {}, {}
-    for t, lst in postings.items():
-        lst.sort()
-        d = np.array([x[0] for x in lst], dtype=np.int64)
-        f = np.array([x[1] for x in lst], dtype=np.int64)
-        nb = np.array([norms[x[0]] for x in lst], dtype=np.uint8)
-        ps = [np.array(x[2], dtype=np.int64) for x in lst]
-        rows[t] = {"df": int(d.size), "ttf": int(f.sum()),
-                   "blocks": encode_posting_list(d, f, nb, ps)}
-        gdf[t] = int(d.size)
-    return K.SegmentIndex(rows, max(docs_tokens) + 1), gdf
-
-
-def _docs_from_slots(per_doc):
-    """per_doc: {docid: {term: [positions]}} -> token lists (filler f_i)."""
-    docs = {}
-    for docid, tp in per_doc.items():
-        n = max((p for ps in tp.values() for p in ps), default=0) + 1
-        toks = [f"f{i}" for i in range(n)]
-        for t, ps in tp.items():
-            for p in ps:
-                toks[p] = t
-        docs[docid] = toks
-    return docs
-
-
-def _run(per_doc, q, dtype, vectorized):
-    docs = _docs_from_slots(per_doc)
-    seg, gdf = _segment(docs)
-    sc = K.Scorer(seg, bm25.BM25Stats(len(docs), 40 * max(1, len(docs)),
-                                      dtype=dtype), gdf)
-    sc.dtype = dtype
-    sc.span_combinators_vectorized = vectorized
-    sc.span_near_2term_vectorized = vectorized
-    sc.span_near_kterm_vectorized = vectorized
-    d, f = sc.eval_spans(q)
-    return dict(zip(d.tolist(), f.tolist()))
-
-
 def _check(per_doc, q, dtype=np.float64):
-    got = _run(per_doc, q, dtype, True)
-    want = _run(per_doc, q, dtype, False)
+    """per_doc: {docid: {term: [positions]}}; eval_spans equals the per-doc
+    reference over uncut candidates, bit for bit."""
+    seg, gdf = segment_from_positions(per_doc, lengths_of(per_doc))
+    n = len(per_doc)
+    sc = K.Scorer(seg, bm25.BM25Stats(n, 40 * max(1, n), dtype=dtype), gdf)
+    sc.dtype = dtype
+    got = dict(zip(*(x.tolist() for x in sc.eval_spans(q))))
+    want = dict(zip(*(x.tolist() for x in
+                      sc._spans_per_doc(q, sc._span_candidates(q)))))
     assert got == want, (per_doc, q, got, want)
 
 
