@@ -1,4 +1,5 @@
-"""Task-local live-docs (.liv) and full-field-norms (.nvd) reads.
+"""Task-local per-segment reads: live docs (.liv), full-field norms (.nvd),
+and the postings and docs rows a search task needs.
 
 Lucene ships each segment's deleted-doc bitset (.liv) and per-field norms
 (.nvd) WITH the segment; a reader working on segment K touches only segment
@@ -13,6 +14,11 @@ reads ITS OWN segment's delete files directly via pyarrow — no SparkSession,
 no driver round-trip, per-task I/O bounded by that segment's delete volume.
 ``pyarrow.dataset`` resolves local paths and object-store URIs alike, so the
 same code path works under spark-submit on a real cluster.
+
+The same helper, ``_dataset_table`` with a pushed filter, serves the search
+path (``search/searcher.py``): each per-segment task reads the query's
+postings rows from its own ``postings/wave=W/segment_id=S`` directory and, after
+its top-k, the keys of at most k docids from its own docs directory.
 
 Everything here must stay importable executor-side: numpy + pyarrow only,
 no pyspark imports.
@@ -29,17 +35,19 @@ __all__ = ["read_segment_deletes", "read_segment_docid_map",
            "load_segment_field_norms", "DeleteSpec"]
 
 
-def _dataset_table(path: str, columns: list[str]):
+def _dataset_table(path: str, columns: list[str], filter=None):
     """Read a parquet directory into an Arrow table, None if absent.
 
     pyarrow.dataset handles both plain paths and fs URIs; FileNotFoundError
     is the "this segment has no file in this generation" case (a delete gen
-    only contains partitions for segments it actually touched)."""
+    only contains partitions for segments it actually touched). ``filter``
+    is a pyarrow compute expression pushed into the scan (row-group
+    statistics prune what they can; the rest is filtered row by row)."""
     import pyarrow.dataset as pads
 
     try:
         dset = pads.dataset(path, format="parquet")
-        return dset.to_table(columns=columns)
+        return dset.to_table(columns=columns, filter=filter)
     except FileNotFoundError:
         return None
 

@@ -234,7 +234,9 @@ class IndexWriter:
 
         Requirements enforced (as Lucene enforces codec/sort compatibility):
         the source must use the SAME codec, the SAME field configuration
-        (fieldinfos), and have NO pending deletes (run
+        (fieldinfos), the SAME index options (indexoptions: a field's
+        IndexOptions never change mid-index, FieldInfo.java:150), and have
+        NO pending deletes (run
         force_merge/expungeDeletes on the source first — Lucene's
         addIndexes(CodecReader...) path does the equivalent reclaim)."""
         import json as _json
@@ -247,11 +249,12 @@ class IndexWriter:
         next_seg = max((s["segment_id"] for s in live), default=-1) + 1
         next_wave = max((s["wave"] for s in live), default=-1) + 1
 
-        def _fieldinfos(d):
-            fp = os.path.join(d, "_catalog", "fieldinfos.json")
+        def _catalog_json(d, name):
+            fp = os.path.join(d, "_catalog", name)
             return _json.load(open(fp)) if os.path.exists(fp) else None
 
-        my_fi = _fieldinfos(self.index_dir)
+        my_fi = _catalog_json(self.index_dir, "fieldinfos.json")
+        my_io = _catalog_json(self.index_dir, "indexoptions.json")
         imported: list[dict] = []
         for sdir in source_dirs:
             scat = IndexCatalog(sdir)
@@ -262,8 +265,10 @@ class IndexWriter:
                     f"codec mismatch: {sdir} uses "
                     f"{load_index_codec(sdir).name!r}, this index "
                     f"{self.codec.name!r}")
-            if _fieldinfos(sdir) != my_fi:
+            if _catalog_json(sdir, "fieldinfos.json") != my_fi:
                 raise ValueError(f"field configuration mismatch with {sdir}")
+            if _catalog_json(sdir, "indexoptions.json") != my_io:
+                raise ValueError(f"index options mismatch with {sdir}")
             if scat.delete_gens() or scat.soft_delete_gens():
                 raise ValueError(
                     f"{sdir} has pending deletes; force_merge/expungeDeletes "

@@ -167,9 +167,9 @@ class TermPredicateQuery(Query):
     regexp/range expansion never leaves the executors (no driver collect, no
     million-literal isin — the scale guard Lucene gets from automata +
     maxClauseCount, MultiTermQuery.java:66-100). The same predicate is applied
-    twice: pushed into the postings scan as a Column filter (partition/
-    row-group pruning) and re-evaluated in the kernel on the terms that
-    arrive.
+    twice: the per-segment reader keeps the postings rows it accepts
+    (Spark-side expansions push it as a Column filter instead) and the
+    kernel re-evaluates it on the terms that arrive.
 
     kind: 'prefix' (args=(prefix,)), 'regex' (args=(anchored_pattern,)),
     'range' (args=(lower, upper, include_lower, include_upper))."""

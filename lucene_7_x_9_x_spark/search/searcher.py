@@ -3,16 +3,20 @@
 Retrace of IndexSearcher.search (SURVEY §3.2): query AST -> fixpoint rewrite
 (multi-term nodes expand against the term dictionary WITH DataFrame predicates,
 never a doc scan) -> global stats resolution (df summed over segments, exactly as
-TermStates aggregates over leaves, TermQuery.java:140-141) -> partition-pruned
-postings scan for the query terms -> per-segment vectorized kernel via
-applyInPandas (the analog of per-leaf bulkScorer slices, IndexSearcher.java:221-296)
--> driver-side TopDocs.merge with (score desc, segment order, docid) tie-break
-(TopDocs.java:80-83).
+TermStates aggregates over leaves, TermQuery.java:140-141) -> one Spark job of
+per-segment tasks (the analog of per-leaf bulkScorer slices,
+IndexSearcher.java:221-296) -> driver-side TopDocs.merge with (score desc,
+segment order, docid) tie-break (TopDocs.java:80-83).
 
-Scale shape: the postings scan pushes `term IN (...)` + live-(wave,segment)
-filters into parquet (partition + row-group pruning); the only data that crosses
-the wire is the query terms' posting rows, grouped per segment; the driver
-receives <= k rows per segment.
+Job shape: every search entry point (search, matches_df, scores_df, count)
+maps a small per-segment function over one DataFrame of the snapshot's live
+segment ids. It is a local relation, so the plan has no exchange, and every
+live segment gets evaluated (MatchAllDocsQuery clauses reach segments that
+hold none of the query's terms). Each task opens its own segment with
+_open_segment: a pyarrow read of that segment's postings directory with a
+pushed `term IN (...)` filter (index/livedocs.py). search's tasks also read
+the keys of their local top-k from their own docs file; the driver receives
+<= k rows per segment. explain opens one segment the same way on the driver.
 """
 
 from __future__ import annotations
@@ -24,16 +28,18 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..fields import FIELD_RANGE_END, FIELD_SEP
 from ..functions import bm25
 from ..functions.similarities import NEEDS_TTF, make_similarity
 from ..index.catalog import IndexCatalog
-from ..index.livedocs import DeleteSpec, load_segment_field_norms
+from ..index.livedocs import (DeleteSpec, _dataset_table,
+                               load_segment_field_norms)
 from . import kernel as K
 from . import query as Q
 from .rewrite import rewrite as _rewrite_tree
@@ -74,22 +80,14 @@ def _make_stats(stats_args: dict):
         return K.PerFieldStats(by_field, base)
     return base
 
-_KERNEL_OUT = T.StructType(
-    [
-        T.StructField("segment_id", T.IntegerType(), False),
-        T.StructField("docid", T.IntegerType(), False),
-        T.StructField("score", T.DoubleType(), False),
-        T.StructField("hits", T.LongType(), False),
-        T.StructField("exact", T.BooleanType(), False),
-    ]
-)
 
-_MATCH_OUT = T.StructType(
-    [
-        T.StructField("segment_id", T.IntegerType(), False),
-        T.StructField("docid", T.IntegerType(), False),
-    ]
-)
+# per-segment task outputs (mapInPandas schemas)
+_MATCH_OUT = "segment_id int not null, docid int not null"
+_SCORE_OUT = _MATCH_OUT + ", score double not null"
+_KERNEL_OUT = (_SCORE_OUT
+               + ", hits bigint not null, exact boolean not null, key string")
+
+_POSTINGS_COLS = ["term", "df", "ttf", "blocks"]
 
 
 @dataclass
@@ -102,17 +100,19 @@ class TopDocs:
 
 def _make_segment_index(pdf: pd.DataFrame, seg_id: int, seg_meta, del_spec,
                         norms_ctx) -> "K.SegmentIndex":
-    """Task-side SegmentIndex over one segment's scanned posting rows.
+    """SegmentIndex over one segment's posting rows (columns term, df, ttf,
+    blocks: a pandas frame, or an Arrow table's to_pydict()).
 
     Deletes are read task-locally for THIS segment only (the .liv analog —
     del_spec carries just gen lists + which-segments flags, never docid
     arrays; index/livedocs.py). Full-field norms load the same way on demand
     (.nvd analog, FieldMaskingSpanQuery path)."""
     rows = {
-        r.term: {"df": r.df, "ttf": r.ttf,
-                 "blocks": [b.asDict() if hasattr(b, "asDict") else b
-                            for b in r.blocks]}
-        for r in pdf.itertuples()
+        term: {"df": df, "ttf": ttf,
+               "blocks": [b.asDict() if hasattr(b, "asDict") else b
+                          for b in blocks]}
+        for term, df, ttf, blocks in zip(pdf["term"], pdf["df"], pdf["ttf"],
+                                         pdf["blocks"])
     }
     deleted = del_spec.deleted_for(seg_id) if del_spec is not None else None
     loader = None
@@ -127,41 +127,49 @@ def _make_segment_index(pdf: pd.DataFrame, seg_id: int, seg_meta, del_spec,
                           norms_loader=loader)
 
 
-def _segment_kernel_fn(query, seg_meta, stats_args, gdf, k, pruning, threshold,
-                       after=None, seg_ords=None, del_spec=None,
-                       norms_ctx=None):
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg_id = int(pdf["segment_id"].iloc[0])
-        stats = _make_stats(stats_args)
-        seg = _make_segment_index(pdf, seg_id, seg_meta, del_spec, norms_ctx)
-        if after is None:
-            d, s, hits, exact = K.segment_top_k(
-                seg, stats, gdf, query, k, pruning=pruning,
-                total_hits_threshold=threshold)
-        else:
-            qq = K._push_boost(query, 1.0)
-            scorer = K.Scorer(seg, stats, gdf)
-            d, s = scorer.eval_scored(qq)
-            hits, exact = int(d.size), True
-            a_score, a_ord, a_doc = after
-            my_ord = seg_ords[seg_id]
-            sf = s.astype(np.float64)
-            keep = (sf < a_score) | (
-                (sf == a_score)
-                & ((my_ord > a_ord) | ((my_ord == a_ord) & (d > a_doc)))
-            )
-            d, s = K.top_k_from_scored(d[keep], s[keep], k)
-        return pd.DataFrame(
-            {
-                "segment_id": np.full(d.size, seg_id, dtype=np.int32),
-                "docid": d.astype(np.int32),
-                "score": s.astype(np.float64),
-                "hits": np.full(d.size, hits, dtype=np.int64),
-                "exact": np.full(d.size, exact, dtype=bool),
-            }
-        )
+def _segment_path(ctx, root: str, seg_id: int) -> str:
+    """`<index>/<root>/wave=W/segment_id=S`: one segment's own directory."""
+    index_dir, seg_waves, _ = ctx[2]
+    return os.path.join(index_dir, root, f"wave={seg_waves[seg_id]}",
+                        f"segment_id={seg_id}")
 
-    return fn
+
+def _open_segment(ctx, seg_id: int, q: Q.Query) -> "K.SegmentIndex":
+    """The one segment reader: query q's SegmentIndex for segment seg_id,
+    read from that segment's postings directory only (a per-leaf scorer
+    opens only its leaf's files). ctx = (seg_meta, del_spec, norms_ctx), the
+    trailing arguments of _make_segment_index.
+
+    The explicit terms ride a pushed `term IN (...)` filter. A query with
+    TermPredicateQuery nodes reads the segment's rows and keeps the terms
+    its predicates accept, with the same p.matches() the kernel re-applies;
+    the rows equal _term_scan(q) restricted to the segment."""
+    terms = Q.collect_terms(q)
+    preds = Q.collect_predicates(q)
+    flt = None if preds else pc.field("term").isin(
+        pa.array(sorted(terms), pa.string()))
+    tbl = _dataset_table(_segment_path(ctx, "postings", seg_id),
+                         _POSTINGS_COLS, filter=flt)
+    if tbl is not None and preds:
+        tbl = tbl.filter(pa.array(
+            [t in terms or any(p.matches(t) for p in preds)
+             for t in tbl.column("term").to_pylist()], pa.bool_()))
+    cols = ({c: [] for c in _POSTINGS_COLS} if tbl is None
+            else tbl.to_pydict())
+    return _make_segment_index(cols, seg_id, *ctx)
+
+
+def _segment_keys(ctx, seg_id: int, docids: np.ndarray) -> list:
+    """Keys of `docids` (same order) from the segment's own docs file: the
+    task's key fetch, bounded by its local top-k."""
+    if not docids.size:
+        return []
+    tbl = _dataset_table(
+        _segment_path(ctx, "docs", seg_id), ["docid", "key"],
+        filter=pc.field("docid").isin(pa.array(docids, pa.int32())))
+    found = {} if tbl is None else dict(zip(
+        tbl.column("docid").to_pylist(), tbl.column("key").to_pylist()))
+    return [found.get(int(d)) for d in docids]
 
 
 class IndexSearcher:
@@ -243,6 +251,14 @@ class IndexSearcher:
         self.include_soft_deleted = include_soft_deleted
         self._del_spec = DeleteSpec.from_snapshot(
             index_dir, self._snapshot, include_soft=include_soft_deleted)
+        # (seg_meta, del_spec, norms_ctx): what _open_segment needs, a few
+        # ints per segment, shipped in every task closure
+        self._seg_ctx = (self.seg_meta, self._del_spec, self._norms_ctx())
+        # one row per live segment: search, matches_df and scores_df map a
+        # per-segment function over it (a local relation: no exchange, one
+        # task per segment up to the core count, every segment evaluated)
+        self._live_segments = spark.createDataFrame(pd.DataFrame(
+            {"segment_id": np.array(self._seg_ids, dtype=np.int32)}))
         self._df_cache: dict = {}
         self.del_counts = {s["segment_id"]: s.get("del_count", 0)
                            for s in self.segments}
@@ -607,9 +623,11 @@ class IndexSearcher:
         raise ValueError(p.kind)
 
     def _term_scan(self, q: Q.Query) -> DataFrame:
-        """Postings scan filtered to exactly what the query needs: explicit
-        terms via IN (row-group pruned by the term sort) OR'd with pushed-down
-        predicate filters for TermPredicateQuery nodes."""
+        """Spark postings scan of exactly what the query needs: explicit
+        terms via IN OR'd with pushed-down predicate filters for
+        TermPredicateQuery nodes. Searches read through _open_segment
+        instead; this scan is its reference (tests, and the kernel replay in
+        perfbench/tracing.py)."""
         terms = Q.collect_terms(q)
         preds = Q.collect_predicates(q)
         cond = F.col("term").isin(list(terms)) if terms else F.lit(False)
@@ -622,18 +640,20 @@ class IndexSearcher:
         resolution). Memoized: the term-dict lookup is the per-query driver
         round-trip, so repeated terms across queries hit the cache
         (LRUQueryCache-adjacent, but for stats; the index is immutable per
-        searcher so no invalidation). Both stats ride the same aggregation —
-        ttf costs nothing extra and LM/DFR similarities need it."""
+        searcher so no invalidation). Both stats ride the same rows — ttf
+        costs nothing extra and LM/DFR similarities need it. One Spark job
+        with no shuffle: the pushed term filter returns one (term, df, ttf)
+        row per segment holding the term (at most segments x missing terms
+        rows), summed here."""
         if not terms:
             return {}
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            rows = (
-                self._postings.where(F.col("term").isin(missing))
-                .groupBy("term").agg(F.sum("df").alias("df"),
-                                     F.sum("ttf").alias("ttf")).collect()
-            )
-            found = {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows}
+            found: dict = {}
+            for r in (self._postings.where(F.col("term").isin(missing))
+                      .select("term", "df", "ttf").collect()):
+                df, ttf = found.get(r["term"], (0, 0))
+                found[r["term"]] = (df + int(r["df"]), ttf + int(r["ttf"]))
             for t in missing:
                 self._df_cache[t] = found.get(t, (0, 0))
         return {t: self._df_cache[t] for t in terms}
@@ -667,23 +687,42 @@ class IndexSearcher:
         if isinstance(q, Q.MatchNoDocsQuery):
             return TopDocs(pd.DataFrame(
                 columns=["rank", "segment_id", "docid", "key", "score"]), 0, True)
-        if isinstance(q, Q.MatchAllDocsQuery) or (
-                isinstance(q, Q.ConstantScoreQuery)
-                and isinstance(q.query, Q.MatchAllDocsQuery)):
-            return self._match_all_top_k(q, k, fetch_keys)
         terms = Q.collect_terms(q)
         gdf = self._global_df(terms)
-        scan = self._term_scan(q)
-        fn = _segment_kernel_fn(
-            q, self.seg_meta, self._stats_args(terms), gdf, k, pruning,
-            total_hits_threshold,
-            after=after, seg_ords=self.seg_ords if after else None,
-            del_spec=self._del_spec, norms_ctx=self._norms_ctx())
-        out = scan.groupBy("segment_id").applyInPandas(fn, _KERNEL_OUT).toPandas()
-        per_seg_hits = out.drop_duplicates("segment_id")[["hits", "exact"]] \
-            if len(out) else pd.DataFrame(columns=["hits", "exact"])
-        total = int(per_seg_hits["hits"].sum()) if len(per_seg_hits) else 0
-        exact = bool(per_seg_hits["exact"].all()) if len(per_seg_hits) else True
+        stats_args = self._stats_args(terms)
+        ctx, seg_ords = self._seg_ctx, self.seg_ords
+
+        def top_k(seg_id: int) -> pd.DataFrame:
+            seg = _open_segment(ctx, seg_id, q)
+            stats = _make_stats(stats_args)
+            if after is None:
+                d, s, hits, exact = K.segment_top_k(
+                    seg, stats, gdf, q, k, pruning=pruning,
+                    total_hits_threshold=total_hits_threshold)
+            else:
+                d, s = K.Scorer(seg, stats, gdf).eval_scored(
+                    K._push_boost(q, 1.0))
+                hits, exact = int(d.size), True
+                a_score, a_ord, a_doc = after
+                my_ord = seg_ords[seg_id]
+                sf = s.astype(np.float64)
+                keep = (sf < a_score) | (
+                    (sf == a_score)
+                    & ((my_ord > a_ord) | ((my_ord == a_ord) & (d > a_doc)))
+                )
+                d, s = K.top_k_from_scored(d[keep], s[keep], k)
+            return pd.DataFrame({
+                "segment_id": np.full(d.size, seg_id, dtype=np.int32),
+                "docid": d.astype(np.int32),
+                "score": s.astype(np.float64),
+                "hits": np.full(d.size, hits, dtype=np.int64),
+                "exact": np.full(d.size, exact, dtype=bool),
+                "key": (_segment_keys(ctx, seg_id, d) if fetch_keys
+                        else [None] * d.size),
+            })
+
+        out = self._per_segment(top_k, _KERNEL_OUT).toPandas()
+        per_seg = out.drop_duplicates("segment_id")
         merged = K.merge_top_k(
             [
                 (int(sid), g["docid"].values, g["score"].values)
@@ -695,12 +734,22 @@ class IndexSearcher:
         hits = pd.DataFrame(merged, columns=["segment_id", "docid", "score"])
         hits.insert(0, "rank", np.arange(1, len(hits) + 1))
         if fetch_keys:
-            if len(hits):
-                hits = self._attach_keys(hits)
-            else:
-                hits = hits.reindex(
-                    columns=["rank", "segment_id", "docid", "key", "score"])
-        return TopDocs(hits, total, exact)
+            keys = dict(zip(zip(out["segment_id"].tolist(),
+                                out["docid"].tolist()), out["key"]))
+            hits.insert(3, "key", [keys[sd] for sd in zip(
+                hits["segment_id"].tolist(), hits["docid"].tolist())])
+        return TopDocs(hits, int(per_seg["hits"].sum()),
+                       bool(per_seg["exact"].all()))
+
+    def _per_segment(self, fn, schema: str) -> DataFrame:
+        """fn(segment_id) -> pandas frame, mapped over the live segment ids:
+        one Spark stage with no exchange, each task reading its own
+        segments' files."""
+        def run(batches):
+            for pdf in batches:
+                for seg_id in pdf["segment_id"]:
+                    yield fn(int(seg_id))
+        return self._live_segments.mapInPandas(run, schema)
 
     def _norms_ctx(self):
         """Closure-safe context for task-local full-field norm reads."""
@@ -811,60 +860,18 @@ class IndexSearcher:
                 .limit(k)
                 .select(key_expr.alias("key"), "sort_value"))
 
-    def _match_all_top_k(self, q, k, fetch_keys):
-        boost = q.boost if hasattr(q, "boost") else 1.0
-        first = (
-            self._live_docs_df().select("segment_id", "docid")
-            .orderBy("segment_id", "docid").limit(k).toPandas()
-        )
-        first["score"] = float(np.float32(boost)) if self.dtype == np.float32 \
-            else float(boost)
-        first.insert(0, "rank", np.arange(1, len(first) + 1))
-        total = sum(s["max_doc"] - self._hidden_count(s)
-                    for s in self.segments)
-        if fetch_keys and len(first):
-            first = self._attach_keys(first)
-        return TopDocs(first, int(total), True)
-
-    def _attach_keys(self, hits: pd.DataFrame) -> pd.DataFrame:
-        pairs = [F.struct(F.lit(int(r.segment_id)), F.lit(int(r.docid)))
-                 for r in hits.itertuples()]
-        keys = (
-            self._docs.where(
-                F.struct(F.col("segment_id").cast("int"),
-                         F.col("docid").cast("int")).isin(pairs))
-            .select("segment_id", "docid", "key").toPandas()
-        )
-        out = hits.merge(keys, on=["segment_id", "docid"], how="left")
-        return out[["rank", "segment_id", "docid", "key", "score"]]
-
     def explain(self, q: Q.Query, segment_id: int, docid: int) -> dict:
         """IndexSearcher.explain analog: score decomposition tree for one hit.
 
-        Driver-side: pulls only the query terms' posting rows of ONE segment
-        (partition-pruned), then runs the kernel's explain — the value is
-        bit-identical to the score search() would produce for that doc."""
+        Driver-side, no Spark job once the query's stats are cached: opens
+        ONE segment with the reader the search tasks use (_open_segment),
+        then runs the kernel's explain — the value is bit-identical to the
+        score search() would produce for that doc."""
         q = self._expand_query(q)
         terms = Q.collect_terms(q)
         gdf = self._global_df(terms)
-        rows = (
-            self._term_scan(q)
-            .where(F.col("segment_id") == segment_id).collect()
-        )
-        term_rows = {
-            r["term"]: {"df": r["df"], "ttf": r["ttf"],
-                        "blocks": [b.asDict() for b in r["blocks"]]}
-            for r in rows
-        }
         stats = _make_stats(self._stats_args(terms))
-        deleted = (self._del_spec.deleted_for(segment_id)
-                   if self._del_spec is not None else None)
-        index_dir, seg_waves, multi_field = self._norms_ctx()
-        seg = K.SegmentIndex(
-            term_rows, self.seg_meta[segment_id], deleted=deleted,
-            norms_loader=lambda fld: load_segment_field_norms(
-                index_dir, seg_waves[segment_id], segment_id, fld,
-                self.seg_meta[segment_id], multi_field))
+        seg = _open_segment(self._seg_ctx, int(segment_id), q)
         return K.explain(seg, stats, gdf, q, docid)
 
     def count(self, q: Q.Query) -> int:
@@ -885,31 +892,21 @@ class IndexSearcher:
         built-ins once the match set exists)."""
         if not _pre_expanded:
             q = self._expand_query(q)
-        if isinstance(q, Q.MatchNoDocsQuery):
-            return self._docs.select("segment_id", "docid").limit(0)
-        if isinstance(q, Q.MatchAllDocsQuery):
-            return self._live_docs_df().select("segment_id", "docid")
         terms = Q.collect_terms(q)
         gdf = self._global_df(terms)
         stats_args = self._stats_args(terms)
-        seg_meta = self.seg_meta
-        del_spec = self._del_spec
-        norms_ctx = self._norms_ctx()
+        ctx = self._seg_ctx
 
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            seg_id = int(pdf["segment_id"].iloc[0])
-            stats = _make_stats(stats_args)
-            seg = _make_segment_index(pdf, seg_id, seg_meta, del_spec,
-                                      norms_ctx)
-            scorer = K.Scorer(seg, stats, gdf)
-            d = scorer.eval_match(K._push_boost(q, 1.0))
+        def matches(seg_id: int) -> pd.DataFrame:
+            seg = _open_segment(ctx, seg_id, q)
+            d = K.Scorer(seg, _make_stats(stats_args), gdf).eval_match(
+                K._push_boost(q, 1.0))
             return pd.DataFrame({
                 "segment_id": np.full(d.size, seg_id, dtype=np.int32),
                 "docid": d.astype(np.int32),
             })
 
-        scan = self._term_scan(q)
-        return scan.groupBy("segment_id").applyInPandas(fn, _MATCH_OUT)
+        return self._per_segment(matches, _MATCH_OUT)
 
     def scores_df(self, q: Q.Query) -> DataFrame:
         """Distributed exhaustive (segment_id, docid, score) — the bulk-scoring
@@ -918,28 +915,16 @@ class IndexSearcher:
         terms = Q.collect_terms(q)
         gdf = self._global_df(terms)
         stats_args = self._stats_args(terms)
-        seg_meta = self.seg_meta
-        del_spec = self._del_spec
-        norms_ctx = self._norms_ctx()
+        ctx = self._seg_ctx
 
-        out_schema = T.StructType([
-            T.StructField("segment_id", T.IntegerType(), False),
-            T.StructField("docid", T.IntegerType(), False),
-            T.StructField("score", T.DoubleType(), False),
-        ])
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            seg_id = int(pdf["segment_id"].iloc[0])
-            stats = _make_stats(stats_args)
-            seg = _make_segment_index(pdf, seg_id, seg_meta, del_spec,
-                                      norms_ctx)
-            scorer = K.Scorer(seg, stats, gdf)
-            d, s = scorer.eval_scored(K._push_boost(q, 1.0))
+        def scores(seg_id: int) -> pd.DataFrame:
+            seg = _open_segment(ctx, seg_id, q)
+            d, s = K.Scorer(seg, _make_stats(stats_args), gdf).eval_scored(
+                K._push_boost(q, 1.0))
             return pd.DataFrame({
                 "segment_id": np.full(d.size, seg_id, dtype=np.int32),
                 "docid": d.astype(np.int32),
                 "score": s.astype(np.float64),
             })
 
-        scan = self._term_scan(q)
-        return scan.groupBy("segment_id").applyInPandas(fn, out_schema)
+        return self._per_segment(scores, _SCORE_OUT)

@@ -1,5 +1,8 @@
 """IndexWriter.addIndexes(Directory...) analog: file-level segment import."""
 
+import os
+import shutil
+
 import numpy as np
 import pytest
 
@@ -68,12 +71,31 @@ def test_add_indexes_rejects_mismatch(spark, tmp_path):
         w.add_indexes(dd)
 
 
+def test_add_indexes_refuses_index_options_mismatch(spark, tmp_path):
+    """A positions index's segments carry no offsets channel: importing them
+    into an offsets index would leave a snapshot whose segments disagree on
+    it, so add_indexes refuses before copying anything."""
+    da = _build(spark, tmp_path, "a7", A_ROWS, index_options="offsets")
+    db = _build(spark, tmp_path, "b7", B_ROWS, index_options="positions")
+    cat = IndexCatalog(da)
+    head, live = cat.head(), cat.live_segments()
+    with IndexWriter(spark, da, int_keys=True) as w:
+        with pytest.raises(ValueError, match="index options"):
+            w.add_indexes(db)
+    cat = IndexCatalog(da)
+    assert cat.head() == head
+    assert cat.live_segments() == live
+
+
 def test_merge_refuses_mixed_offsets_channels(spark, tmp_path):
-    """add_indexes can place segments without an offsets channel beside
-    segments with one; execute_merge must refuse them before any commit
-    instead of zero-filling the missing offsets."""
+    """Segments without an offsets channel beside segments with one (here a
+    source whose catalog records offsets its segments lack, which
+    add_indexes cannot tell from the catalog); execute_merge must refuse
+    them before any commit instead of zero-filling the missing offsets."""
     da = _build(spark, tmp_path, "a6", A_ROWS, index_options="offsets")
     db = _build(spark, tmp_path, "b6", B_ROWS, index_options="positions")
+    shutil.copy(os.path.join(da, "_catalog", "indexoptions.json"),
+                os.path.join(db, "_catalog", "indexoptions.json"))
     with IndexWriter(spark, da, int_keys=True) as w:
         w.add_indexes(db)
     cat = IndexCatalog(da)

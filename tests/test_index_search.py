@@ -197,3 +197,44 @@ def test_search_after_pagination(built):
     got = [(int(r.segment_id), int(r.docid), float(r.score))
            for r in page2.hits.itertuples()]
     _assert_equal_topk(got, want[5:], "searchAfter")
+
+
+# Two segments (keys 0-1, 2-3); only key 1 holds "gamma", so segment 1 has
+# no postings row for it.
+GAMMA_ROWS = [(0, "alpha beta"), (1, "alpha gamma"), (2, "beta delta"),
+              (3, "delta epsilon")]
+
+
+@pytest.fixture(scope="module")
+def gamma_idx(spark, tmp_path_factory):
+    idx = str(tmp_path_factory.mktemp("gamma"))
+    build_index(spark, spark.createDataFrame(GAMMA_ROWS,
+                                             "doc_id long, text string"),
+                "doc_id", "text", idx, docs_per_segment=2, int_keys=True,
+                term_shards=2)
+    return idx
+
+
+def test_match_all_reaches_segments_without_query_terms(spark, gamma_idx):
+    """MatchAllDocsQuery inside a BooleanQuery must evaluate every live
+    segment, including one that holds none of the query's terms."""
+    from lucene_7_x_9_x_spark.search.queryparser import parse
+
+    s = IndexSearcher(spark, gamma_idx)
+    assert len(s.segments) == 2
+    gamma = Q.TermQuery("gamma")
+    cases = [
+        (Q.BooleanQuery(must=(Q.MatchAllDocsQuery(),), must_not=(gamma,)),
+         {0, 2, 3}),
+        (Q.BooleanQuery(should=(Q.MatchAllDocsQuery(), gamma)),
+         {0, 1, 2, 3}),
+        (parse("*:* -gamma"), {0, 2, 3}),
+    ]
+    for q, want in cases:
+        td = s.search(q, k=10)
+        assert {int(k) for k in td.hits["key"]} == want, q
+        assert td.total_hits == len(want), q
+        assert s.count(q) == len(want), q
+    # the gamma doc outscores the match-all-only docs
+    td = s.search(cases[1][0], k=1)
+    assert list(td.hits["key"]) == ["1"]

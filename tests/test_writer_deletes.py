@@ -166,3 +166,21 @@ def test_maybe_merge_reclaims_deletes(spark, idx):
     assert s.count(Q.MatchAllDocsQuery()) == 5
     if merges:  # if policy chose to merge, deletes must be gone
         assert sum(seg.get("del_count", 0) for seg in s.segments) == 0
+
+
+def test_delete_by_query_with_match_all_clause(spark, tmp_path):
+    """deleteDocuments(*:* -gamma) deletes every doc without gamma, in the
+    segment that holds gamma and in the one that holds none of it."""
+    d = str(tmp_path / "gamma")
+    rows = [(0, "alpha beta"), (1, "alpha gamma"), (2, "beta delta"),
+            (3, "delta epsilon")]
+    build_index(spark, _mk_docs(spark, rows), "doc_id", "text", d,
+                docs_per_segment=2, int_keys=True, term_shards=2)
+    assert len(IndexSearcher(spark, d).segments) == 2
+    w = IndexWriter(spark, d, int_keys=True)
+    q = Q.BooleanQuery(must=(Q.MatchAllDocsQuery(),),
+                       must_not=(Q.TermQuery("gamma"),))
+    assert w.delete_documents(q) == 3
+    s = IndexSearcher(spark, d)
+    assert _hit_keys(s, Q.MatchAllDocsQuery()) == [1]
+    assert s.count(Q.MatchAllDocsQuery()) == 1
