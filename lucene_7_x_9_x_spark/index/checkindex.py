@@ -19,6 +19,7 @@ from pyspark.sql import types as T
 from ..functions import smallfloat
 from ..functions.codecs import decode_blocks, BLOCK_SIZE
 from .catalog import IndexCatalog
+from .merge import offsets_channels
 
 _VIOL = T.StructType([T.StructField("violation", T.StringType(), False)])
 
@@ -91,6 +92,14 @@ def check_index(spark: SparkSession, index_dir: str) -> list:
         .collect()
     )
     violations += [r["violation"] for r in v]
+
+    # one offsets channel per index (FieldInfo update-and-check): segments
+    # that disagree read back zero-filled offsets, and a merge refuses them
+    with_off, without = offsets_channels(postings)
+    if with_off and without:
+        violations.append(
+            f"mixed offsets channel: segments {with_off} have it, "
+            f"segments {without} do not")
 
     # docids dense 0..n-1 per segment, in key order
     dense = (

@@ -203,26 +203,34 @@ def _score(candidate, hit_too_large: bool, merge_factor: int,
 # merge execution (SegmentMerger analog)
 # ---------------------------------------------------------------------------
 
+def offsets_channels(postings) -> tuple[list[int], list[int]]:
+    """(segment ids with the offsets channel, segment ids without it) among
+    the segments of `postings`.
+
+    Probes each segment's first block, among terms with positions (the
+    channel rides on them). A pre-offsets postings schema has no channel
+    anywhere."""
+    if postings is None:
+        return [], []
+    elem = postings.schema["blocks"].dataType.elementType
+    if "off_bytes" not in elem.names:
+        return [], []
+    first = F.col("blocks")[0]
+    has_off = F.coalesce(F.length(first["off_bytes"]) > 0, F.lit(False))
+    rows = (postings.where(F.length(first["pos_bytes"]) > 0)
+            .select("segment_id", has_off.alias("off")).distinct().collect())
+    return (sorted({int(r["segment_id"]) for r in rows if r["off"]}),
+            sorted({int(r["segment_id"]) for r in rows if not r["off"]}))
+
+
 def _refuse_mixed_offsets(postings) -> None:
     """Raise when the merge inputs disagree on the offsets channel.
 
     decode_blocks zero-fills the offsets of an input that lacks the channel,
     and the merged blocks would then carry those zeros as real offsets — an
     index's options never change mid-index (FieldInfo update-and-check), so
-    such inputs are refused. Probes each input's first block, among terms
-    with positions (the channel rides on them), before anything is
-    written."""
-    if postings is None:
-        return
-    elem = postings.schema["blocks"].dataType.elementType
-    if "off_bytes" not in elem.names:
-        return  # pre-offsets postings schema: no input has the channel
-    first = F.col("blocks")[0]
-    has_off = F.coalesce(F.length(first["off_bytes"]) > 0, F.lit(False))
-    rows = (postings.where(F.length(first["pos_bytes"]) > 0)
-            .select("segment_id", has_off.alias("off")).distinct().collect())
-    with_off = sorted({int(r["segment_id"]) for r in rows if r["off"]})
-    without = sorted({int(r["segment_id"]) for r in rows if not r["off"]})
+    such inputs are refused before anything is written."""
+    with_off, without = offsets_channels(postings)
     if with_off and without:
         raise ValueError(
             f"cannot merge segments {with_off} (offsets channel) with "

@@ -2,25 +2,40 @@
 
 Retrace of IndexSearcher.search (SURVEY §3.2): query AST -> fixpoint rewrite
 (multi-term nodes expand against the term dictionary WITH DataFrame predicates,
-never a doc scan) -> global stats resolution (df summed over segments, exactly as
-TermStates aggregates over leaves, TermQuery.java:140-141) -> one Spark job of
-per-segment tasks (the analog of per-leaf bulkScorer slices,
+never a doc scan) -> global stats resolution on the driver (df summed over
+segments, exactly as TermStates.build aggregates one seekExact per leaf,
+TermQuery.java:140-141) -> one Spark job with one task per slice of segments
+(IndexSearcher.slices and its per-slice bulkScorer loop,
 IndexSearcher.java:221-296) -> driver-side TopDocs.merge with (score desc,
 segment order, docid) tie-break (TopDocs.java:80-83).
 
+Term statistics: _global_stats reads the (term, df, ttf) rows of the query's
+terms from each live segment's postings directory with pyarrow and a pushed
+`term IN (...)` filter, sums them per term and memoizes them for the
+searcher's life. No Spark job: the postings files already hold each
+segment's term-sorted statistics, so no sidecar copies them.
+
 Job shape: every search entry point (search, matches_df, scores_df, count)
-maps a small per-segment function over one DataFrame of the snapshot's live
-segment ids. It is a local relation, so the plan has no exchange, and every
-live segment gets evaluated (MatchAllDocsQuery clauses reach segments that
-hold none of the query's terms). Each task opens its own segment with
-_open_segment: a pyarrow read of that segment's postings directory with a
-pushed `term IN (...)` filter (index/livedocs.py). search's tasks also read
-the keys of their local top-k from their own docs file; the driver receives
-<= k rows per segment. explain opens one segment the same way on the driver.
+maps a small per-segment function over one DataFrame with a row per slice
+(_slices: segments by max_doc descending, a segment above
+MAX_DOCS_PER_SLICE alone, smaller ones grouped up to that many docs or
+MAX_SEGMENTS_PER_SLICE segments). It is a local relation, so the plan has
+no exchange, each slice is one Python task that loops over its segments,
+and every live segment gets evaluated (MatchAllDocsQuery clauses reach
+segments that hold none of the query's terms). A task's cost is mostly
+PySpark's fixed per-task Python set-up, not the kernel, so a search on a
+fresh searcher over small segments is one job with one task. Each segment
+is opened with _open_segment: a pyarrow read of its postings directory with
+the same pushed filter (index/livedocs.py). search's tasks also read the
+keys of their local top-k from their own docs file; the driver receives
+<= k rows per segment. explain opens one segment the same way on the
+driver. The Spark views of the term dictionary and docs (postings_df,
+docs_df) are built on first use: no search entry point reads them.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 from dataclasses import dataclass
@@ -37,7 +52,7 @@ from pyspark.sql.window import Window
 from ..fields import FIELD_RANGE_END, FIELD_SEP
 from ..functions import bm25
 from ..functions.similarities import NEEDS_TTF, make_similarity
-from ..index.catalog import IndexCatalog
+from ..index.catalog import IndexCatalog, read_live_partitions
 from ..index.livedocs import (DeleteSpec, _dataset_table,
                                load_segment_field_norms)
 from . import kernel as K
@@ -172,6 +187,33 @@ def _segment_keys(ctx, seg_id: int, docids: np.ndarray) -> list:
     return [found.get(int(d)) for d in docids]
 
 
+# IndexSearcher.MAX_DOCS_PER_SLICE / MAX_SEGMENTS_PER_SLICE
+MAX_DOCS_PER_SLICE = 250_000
+MAX_SEGMENTS_PER_SLICE = 5
+
+
+def _slices(segments) -> list[list[int]]:
+    """IndexSearcher.slices: group (segment_id, max_doc) pairs, given in
+    leaf order, into the segment-id lists one task each searches. Segments
+    go by max_doc descending (ties keep leaf order); one above
+    MAX_DOCS_PER_SLICE is a slice alone, and smaller ones fill a slice until
+    it holds more than MAX_DOCS_PER_SLICE docs or MAX_SEGMENTS_PER_SLICE
+    segments."""
+    out, group, docs = [], None, 0
+    for seg_id, max_doc in sorted(segments, key=lambda s: -s[1]):
+        if max_doc > MAX_DOCS_PER_SLICE:
+            out.append([seg_id])
+            continue
+        if group is None:
+            group = []
+            out.append(group)
+        group.append(seg_id)
+        docs += max_doc
+        if len(group) >= MAX_SEGMENTS_PER_SLICE or docs > MAX_DOCS_PER_SLICE:
+            group, docs = None, 0
+    return out
+
+
 class IndexSearcher:
     def __init__(self, spark: SparkSession, index_dir: str,
                  dtype=np.float32, k1: float = bm25.K1, b: float = bm25.B,
@@ -254,23 +296,33 @@ class IndexSearcher:
         # (seg_meta, del_spec, norms_ctx): what _open_segment needs, a few
         # ints per segment, shipped in every task closure
         self._seg_ctx = (self.seg_meta, self._del_spec, self._norms_ctx())
-        # one row per live segment: search, matches_df and scores_df map a
-        # per-segment function over it (a local relation: no exchange, one
-        # task per segment up to the core count, every segment evaluated)
-        self._live_segments = spark.createDataFrame(pd.DataFrame(
-            {"segment_id": np.array(self._seg_ids, dtype=np.int32)}))
+        # one row per slice, segments in leaf order: every search entry
+        # point maps a per-segment function over it (a local relation: no
+        # exchange, one task per slice up to the core count, every segment
+        # evaluated)
+        self._live_segments = spark.createDataFrame(
+            pd.DataFrame({"segment_ids": _slices(sorted(
+                self.seg_meta.items(), key=lambda s: self.seg_ords[s[0]]))}),
+            "segment_ids array<int>")
         self._df_cache: dict = {}
         self.del_counts = {s["segment_id"]: s.get("del_count", 0)
                            for s in self.segments}
-        # live partitions read by direct path (SegmentInfos.files analog) —
-        # keeps the plan free of O(#segments) literal expressions
-        from ..index.catalog import read_live_partitions
-        self._postings = read_live_partitions(
-            spark, index_dir, "postings", self.segments)
-        self._docs = read_live_partitions(
-            spark, index_dir, "docs", self.segments)
 
     # --- term dictionary ----------------------------------------------------
+    # Spark views of the live partitions, read by direct path (SegmentInfos.
+    # files analog, no O(#segments) literal expressions in the plan). Built
+    # on first use: listing and schema inference cost Spark jobs, and no
+    # search entry point reads them.
+    @functools.cached_property
+    def _postings(self) -> DataFrame:
+        return read_live_partitions(self.spark, self._index_dir, "postings",
+                                    self.segments)
+
+    @functools.cached_property
+    def _docs(self) -> DataFrame:
+        return read_live_partitions(self.spark, self._index_dir, "docs",
+                                    self.segments)
+
     def postings_df(self) -> DataFrame:
         return self._postings
 
@@ -636,26 +688,31 @@ class IndexSearcher:
         return self._postings.where(cond)
 
     def _global_stats(self, terms) -> dict:
-        """Cross-segment (docFreq, totalTermFreq) per term (TermStates
-        resolution). Memoized: the term-dict lookup is the per-query driver
-        round-trip, so repeated terms across queries hit the cache
-        (LRUQueryCache-adjacent, but for stats; the index is immutable per
-        searcher so no invalidation). Both stats ride the same rows — ttf
-        costs nothing extra and LM/DFR similarities need it. One Spark job
-        with no shuffle: the pushed term filter returns one (term, df, ttf)
-        row per segment holding the term (at most segments x missing terms
-        rows), summed here."""
+        """Cross-segment (docFreq, totalTermFreq) per term (TermStates.build:
+        one seekExact per leaf, on the searching thread). Read on the driver
+        from each live segment's postings directory with the pushed
+        `term IN (...)` filter, at most one (term, df, ttf) row per segment
+        and term, summed here; no Spark job. Memoized: the index is
+        immutable per searcher, so repeated terms across queries hit the
+        cache with no invalidation. Both stats ride the same rows — ttf
+        costs nothing extra and LM/DFR similarities need it."""
         if not terms:
             return {}
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            found: dict = {}
-            for r in (self._postings.where(F.col("term").isin(missing))
-                      .select("term", "df", "ttf").collect()):
-                df, ttf = found.get(r["term"], (0, 0))
-                found[r["term"]] = (df + int(r["df"]), ttf + int(r["ttf"]))
-            for t in missing:
-                self._df_cache[t] = found.get(t, (0, 0))
+            flt = pc.field("term").isin(pa.array(sorted(missing), pa.string()))
+            found = {t: (0, 0) for t in missing}
+            for seg_id in self._seg_ids:
+                tbl = _dataset_table(
+                    _segment_path(self._seg_ctx, "postings", seg_id),
+                    ["term", "df", "ttf"], filter=flt)
+                if tbl is None:
+                    continue
+                for t, df, ttf in zip(*(tbl.column(c).to_pylist()
+                                        for c in ("term", "df", "ttf"))):
+                    d0, t0 = found[t]
+                    found[t] = (d0 + df, t0 + ttf)
+            self._df_cache.update(found)
         return {t: self._df_cache[t] for t in terms}
 
     def _global_df(self, terms) -> dict:
@@ -742,13 +799,14 @@ class IndexSearcher:
                        bool(per_seg["exact"].all()))
 
     def _per_segment(self, fn, schema: str) -> DataFrame:
-        """fn(segment_id) -> pandas frame, mapped over the live segment ids:
-        one Spark stage with no exchange, each task reading its own
-        segments' files."""
+        """fn(segment_id) -> pandas frame, mapped over the live segments:
+        one Spark stage with no exchange and one task per slice, each task
+        looping over its slice's segments and reading their own files."""
         def run(batches):
             for pdf in batches:
-                for seg_id in pdf["segment_id"]:
-                    yield fn(int(seg_id))
+                for ids in pdf["segment_ids"]:
+                    for seg_id in ids:
+                        yield fn(int(seg_id))
         return self._live_segments.mapInPandas(run, schema)
 
     def _norms_ctx(self):
@@ -877,36 +935,51 @@ class IndexSearcher:
     def count(self, q: Q.Query) -> int:
         """TotalHitCountCollector analog (TotalHitCountCollector.java):
         match-only evaluation — no norm decode, no BM25 arithmetic in the
-        plan, just the match-set cardinality."""
+        plan, just the match-set cardinality. Each task returns one count
+        per segment and the driver sums them: one job, no exchange."""
         q = self._expand_query(q)
         if isinstance(q, Q.MatchNoDocsQuery):
             return 0
         if isinstance(q, Q.MatchAllDocsQuery):
             return sum(s["max_doc"] - self._hidden_count(s)
                        for s in self.segments)
-        return int(self.matches_df(q, _pre_expanded=True).count())
+        match = self._match_fn(q)
 
-    def matches_df(self, q: Q.Query, _pre_expanded: bool = False) -> DataFrame:
+        def n(seg_id: int) -> pd.DataFrame:
+            return pd.DataFrame({"n": [match(seg_id).size]})
+
+        return int(self._per_segment(n, "n bigint not null")
+                   .toPandas()["n"].sum())
+
+    def matches_df(self, q: Q.Query) -> DataFrame:
         """Distributed (segment_id, docid) match set — composes with DataFrame
         ops for grouping / faceting / field-sort (SURVEY §2.5: all Spark
         built-ins once the match set exists)."""
-        if not _pre_expanded:
-            q = self._expand_query(q)
-        terms = Q.collect_terms(q)
-        gdf = self._global_df(terms)
-        stats_args = self._stats_args(terms)
-        ctx = self._seg_ctx
+        match = self._match_fn(self._expand_query(q))
 
         def matches(seg_id: int) -> pd.DataFrame:
-            seg = _open_segment(ctx, seg_id, q)
-            d = K.Scorer(seg, _make_stats(stats_args), gdf).eval_match(
-                K._push_boost(q, 1.0))
+            d = match(seg_id)
             return pd.DataFrame({
                 "segment_id": np.full(d.size, seg_id, dtype=np.int32),
                 "docid": d.astype(np.int32),
             })
 
         return self._per_segment(matches, _MATCH_OUT)
+
+    def _match_fn(self, q: Q.Query):
+        """seg_id -> matching docids of the expanded query q, closure-safe
+        for the per-segment tasks of count and matches_df."""
+        terms = Q.collect_terms(q)
+        gdf = self._global_df(terms)
+        stats_args = self._stats_args(terms)
+        ctx = self._seg_ctx
+
+        def match(seg_id: int) -> np.ndarray:
+            seg = _open_segment(ctx, seg_id, q)
+            return K.Scorer(seg, _make_stats(stats_args), gdf).eval_match(
+                K._push_boost(q, 1.0))
+
+        return match
 
     def scores_df(self, q: Q.Query) -> DataFrame:
         """Distributed exhaustive (segment_id, docid, score) — the bulk-scoring

@@ -90,14 +90,19 @@ def test_add_indexes_refuses_index_options_mismatch(spark, tmp_path):
 def test_merge_refuses_mixed_offsets_channels(spark, tmp_path):
     """Segments without an offsets channel beside segments with one (here a
     source whose catalog records offsets its segments lack, which
-    add_indexes cannot tell from the catalog); execute_merge must refuse
-    them before any commit instead of zero-filling the missing offsets."""
+    add_indexes cannot tell from the catalog); CheckIndex must flag them,
+    naming both sides, and execute_merge must refuse them before any commit
+    instead of zero-filling the missing offsets."""
     da = _build(spark, tmp_path, "a6", A_ROWS, index_options="offsets")
     db = _build(spark, tmp_path, "b6", B_ROWS, index_options="positions")
     shutil.copy(os.path.join(da, "_catalog", "indexoptions.json"),
                 os.path.join(db, "_catalog", "indexoptions.json"))
+    own = [s["segment_id"] for s in IndexCatalog(da).live_segments()]
     with IndexWriter(spark, da, int_keys=True) as w:
-        w.add_indexes(db)
+        new_ids = w.add_indexes(db)
+    assert [v for v in check_index(spark, da) if "offsets" in v] == [
+        f"mixed offsets channel: segments {sorted(own)} have it, "
+        f"segments {sorted(new_ids)} do not"]
     cat = IndexCatalog(da)
     head, live = cat.head(), cat.live_segments()
     with pytest.raises(ValueError, match="offsets channel"):

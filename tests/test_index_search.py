@@ -238,3 +238,37 @@ def test_match_all_reaches_segments_without_query_terms(spark, gamma_idx):
     # the gamma doc outscores the match-all-only docs
     td = s.search(cases[1][0], k=1)
     assert list(td.hits["key"]) == ["1"]
+
+
+@pytest.fixture(scope="module")
+def built7(spark, tmp_path_factory):
+    """The same corpus over seven segments: two slices of the search job."""
+    idx = str(tmp_path_factory.mktemp("idx7"))
+    corpus = generate_corpus(spark, N_DOCS, seed=42).cache()
+    build_index(spark, corpus, "url", "text", idx, docs_per_segment=60,
+                segments_per_wave=4, term_shards=8)
+    searcher = IndexSearcher(spark, idx)
+    oracle = OracleIndex(
+        searcher.docs_df().select("segment_id", "docid", "key").toPandas()
+        .merge(corpus.selectExpr("url as key", "text").toPandas(), on="key"))
+    corpus.unpersist()
+    return searcher, oracle
+
+
+def test_two_slices_vs_oracle(built7):
+    """Seven segments run as two tasks (five segments, then two); hits,
+    scores, totals and counts match the oracle as on the 3-segment index."""
+    searcher, oracle = built7
+    assert len(searcher.segments) == 7
+    assert sorted(len(r.segment_ids)
+                  for r in searcher._live_segments.collect()) == [2, 5]
+    for name, q in _register_queries(oracle).items():
+        k_use = 50 if name == "Q12_k_gt_hits" else 10
+        td = searcher.search(q, k=k_use, fetch_keys=False)
+        want, n_hits = oracle.top_k(q, k=k_use)
+        got = [(int(r.segment_id), int(r.docid), float(r.score))
+               for r in td.hits.itertuples()]
+        _assert_equal_topk(got, want, name)
+        if td.total_hits_exact:
+            assert td.total_hits == n_hits, name
+        assert searcher.count(q) == n_hits, name
