@@ -337,7 +337,6 @@ def index_wave(
     term_shards: int = 32,
     salt_bucket_docs: int | None = None,
     docs_per_segment: int = 4096,
-    coalesce_postings: bool = True,
     fields: list[str] | None = None,
     codec: "Codec | str" = DEFAULT_CODEC,
     analyzer_by_lang: dict | None = None,
@@ -386,18 +385,16 @@ def index_wave(
     crashed attempt is safely retried (parquet dirs are only visible to readers
     after the snapshot commit anyway).
 
-    coalesce_postings=True (the default since round 5d) re-clusters the
-    encoded postings by segment before the partitioned write — one file per
-    segment instead of tasks x segments. Measured at 600k docs / local[32]
-    (interleaved A/B, quiet host): the build itself is ~45% FASTER coalesced
-    (46.8/37.5s -> 26.8/21.6s) because the task-count x segment-count file
-    explosion (2,976 files for 147 segments) pays a driver-serial commit
-    rename loop that dwarfs the one extra fully-parallel shuffle of the
-    compressed index; query latency drops ~50% on the same index (term-
-    pruned scan floor 1.0s -> 0.48s: parquet footer reads + listing scale
-    with file count). On object stores at 1000-executor scale both effects
-    are larger (per-file serial renames + LIST calls). Pass False to skip
-    the shuffle when a wave's postings are too large to re-shuffle."""
+    The encoded postings are re-clustered by segment before the partitioned
+    write — one file per segment instead of tasks x segments. Measured at
+    600k docs / local[32] (interleaved A/B, quiet host): the build itself is
+    ~45% FASTER coalesced (46.8/37.5s -> 26.8/21.6s) because the task-count x
+    segment-count file explosion (2,976 files for 147 segments) pays a
+    driver-serial commit rename loop that dwarfs the one extra fully-parallel
+    shuffle of the compressed index; query latency drops ~50% on the same
+    index (term-pruned scan floor 1.0s -> 0.48s: parquet footer reads +
+    listing scale with file count). On object stores at 1000-executor scale
+    both effects are larger (per-file serial renames + LIST calls)."""
     if analyzer_by_lang and fields:
         raise ValueError("analyzer_by_lang supports single-field mode only")
     from ..analysis.tokenizer import PayloadAnalyzer
@@ -470,13 +467,6 @@ def index_wave(
     # fast.) Duplicate keys are harmless here: every row keeps ITS OWN term
     # vector, and the (key, doclen, tvh) sort makes docids deterministic.
     part = tokenized.repartition("segment_id").persist()
-    if os.environ.get("SPARK_GRAFT_INFOSTREAM_EAGER"):
-        # diagnosis-only (alters the measured plan: materializes the cache
-        # as its own job instead of inside the docs write) — splits the
-        # docs-write phase timing into tokenize+shuffle+cache vs write
-        _te = time.time()
-        part.count()
-        _infostream(wave, "tokenize+shuffle+cache (eager probe)", _te)
 
     order_key = F.col("key").cast("long") if int_keys else F.col("key")
     # index sort: the sort field leads the per-segment docid window (key/
@@ -623,10 +613,15 @@ def index_wave(
         return _encode_partition(pdf, store_positions, codec, omit_freqs)
 
     if salt_bucket_docs and salt_bucket_docs < docs_per_segment:
-        salted_schema = S.POSTINGS_SCHEMA.add("salt", T.IntegerType())
+        # a new StructType: StructType.add appends to (and returns) self,
+        # which would leak the helper columns into the shared module schema
+        salted_schema = T.StructType(S.POSTINGS_SCHEMA.fields + [
+            T.StructField("shard", T.IntegerType(), False),
+            T.StructField("salt", T.IntegerType(), False)])
 
         def _enc_salted(pdf: pd.DataFrame) -> pd.DataFrame:
             out = _encode_partition(pdf, store_positions, codec, omit_freqs)
+            out["shard"] = int(pdf["shard"].iloc[0])
             out["salt"] = int(pdf["salt"].iloc[0])
             return out
 
@@ -638,20 +633,20 @@ def index_wave(
             .applyInPandas(_enc_salted, salted_schema)
         )
         postings = salted.groupBy("segment_id", "shard").applyInPandas(
-            lambda pdf: _merge_salted(pdf), S.POSTINGS_SCHEMA
+            _merge_salted, S.POSTINGS_SCHEMA
         )
     else:
         postings = exploded.groupBy("segment_id", "shard").applyInPandas(
             _enc, S.POSTINGS_SCHEMA
         )
 
-    if coalesce_postings:
-        postings = postings.repartition(F.col("segment_id"))
     (
-        # (segment, term) sort within tasks: tight parquet row-group min/max
-        # on term so query-time In(term,...) pushdown skips row groups (the
-        # term-dict "which block" role of the FST, SURVEY §1.1); no shuffle
-        postings.sortWithinPartitions("segment_id", "term")
+        # one file per segment (see the docstring), then a (segment, term)
+        # sort within tasks: tight parquet row-group min/max on term so
+        # query-time In(term,...) pushdown skips row groups (the term-dict
+        # "which block" role of the FST, SURVEY §1.1)
+        postings.repartition(F.col("segment_id"))
+        .sortWithinPartitions("segment_id", "term")
         .withColumn("wave", F.lit(wave))
         .write.mode("append")
         .partitionBy("wave", "segment_id")
@@ -715,7 +710,6 @@ def build_index(
     int_keys: bool = False,
     term_shards: int = 32,
     salt_bucket_docs: int | None = None,
-    coalesce_postings: bool = True,
     resume: bool = False,
     field_cols: dict[str, str] | None = None,
     default_field: str | None = None,
@@ -930,8 +924,7 @@ def build_index(
                 spark, src, index_dir, wave, analyzer=analyzer,
                 store_positions=store_positions, int_keys=int_keys,
                 term_shards=term_shards, salt_bucket_docs=salt_bucket_docs,
-                docs_per_segment=docs_per_segment,
-                coalesce_postings=coalesce_postings, fields=fields,
+                docs_per_segment=docs_per_segment, fields=fields,
                 codec=codec, analyzer_by_lang=analyzer_by_lang,
                 store_term_vectors=store_term_vectors,
                 omit_freqs=omit_freqs, omit_norms=omit_norms,

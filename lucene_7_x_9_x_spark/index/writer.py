@@ -386,14 +386,17 @@ class IndexWriter:
                 .join(batch_keys, "key", "left_semi")
                 .select("segment_id", "docid"))
 
+    def _key_targets(self, keys) -> DataFrame:
+        """(segment_id, docid) of every live doc whose key is in `keys`,
+        through the same join as an update batch."""
+        batch = self.spark.createDataFrame([(str(k),) for k in keys],
+                                           "key string")
+        return self._resolve_batch_targets(batch, "key")
+
     def delete_documents_by_keys(self, keys) -> int:
         """deleteDocuments(Term...) analog: delete every doc whose key is in
         `keys`. Returns the number of newly-deleted docs."""
-        docs = self._live_docs()
-        targets = docs.where(
-            F.col("key").isin([str(k) for k in keys])
-        ).select("segment_id", "docid")
-        return self._apply_deletes(targets)
+        return self._apply_deletes(self._key_targets(keys))
 
     def delete_documents(self, query) -> int:
         """deleteDocuments(Query) analog: resolve the match set through the
@@ -453,16 +456,18 @@ class IndexWriter:
         per_seg, gen = self._write_delete_files(targets, kind=kind)
         if not per_seg:
             return 0
-        if soft:
-            extra = {"soft_delete_gens": self.cat.soft_delete_gens() + [gen]}
-            key = "soft_del_count"
-        else:
-            extra = {"delete_gens": self.cat.delete_gens() + [gen]}
-            key = "del_count"
         self.cat.commit(
-            self._bump_del_counts(live, per_seg, key),
-            operation="soft_delete" if soft else "delete", extra=extra)
+            self._bump_del_counts(live, per_seg,
+                                  "soft_del_count" if soft else "del_count"),
+            operation="soft_delete" if soft else "delete",
+            extra=self._delete_gens_extra(gen, soft))
         return sum(per_seg.values())
+
+    def _delete_gens_extra(self, gen: int, soft: bool) -> dict:
+        """The catalog field a commit extends to publish delete gen `gen`."""
+        if soft:
+            return {"soft_delete_gens": self.cat.soft_delete_gens() + [gen]}
+        return {"delete_gens": self.cat.delete_gens() + [gen]}
 
     # --- soft deletes (softDeletesField analog) -----------------------------
     def soft_delete_documents_by_keys(self, keys) -> int:
@@ -470,11 +475,7 @@ class IndexWriter:
         readable via IndexSearcher(include_soft_deleted=True) and survive
         merges (SoftDeletesRetentionMergePolicy with a keep-all retention
         query — SoftDeletesDirectoryReaderWrapper.java semantics)."""
-        docs = self._live_docs()
-        targets = docs.where(
-            F.col("key").isin([str(k) for k in keys])
-        ).select("segment_id", "docid")
-        return self._apply_deletes(targets, soft=True)
+        return self._apply_deletes(self._key_targets(keys), soft=True)
 
     def soft_update_documents(self, df: DataFrame, key_col: str,
                               text_col: str) -> list[int]:
@@ -482,42 +483,7 @@ class IndexWriter:
         old versions and add the new ones in ONE atomic snapshot commit; the
         old versions remain readable through the soft-deletes-inclusive
         reader (the demo's SoftDeletesTest1 history behavior)."""
-        t0 = time.time()
-        live = self.cat.live_segments()
-        targets = self._resolve_batch_targets(df, key_col)
-        per_seg, gen = self._write_delete_files(targets, kind="soft_deletes")
-
-        next_seg = max((s["segment_id"] for s in live), default=-1) + 1
-        next_wave = max((s["wave"] for s in live), default=-1) + 1
-        total = df.count()
-        segs: list[dict] = []
-        if total:
-            n_new = max(1, math.ceil(total / self.docs_per_segment))
-            key_s = F.col(key_col).cast("string")
-            src = df.select(
-                key_s.alias("key"), F.col(text_col).alias("text"),
-                (F.lit(next_seg)
-                 + F.pmod(F.xxhash64(key_s), F.lit(n_new))).cast("int")
-                .alias("segment_id"),
-            )
-            segs = index_wave(
-                self.spark, src, self.index_dir, next_wave,
-                analyzer=self.analyzer, store_positions=self.store_positions,
-                int_keys=self.int_keys, term_shards=self.term_shards,
-                docs_per_segment=self.docs_per_segment,
-                codec=self.codec,
-                omit_freqs=self.omit_freqs, omit_norms=self.omit_norms,
-                store_offsets=self.store_offsets)
-            wall_ms = int((time.time() - t0) * 1000)
-            append_lineage(self.index_dir, [
-                ("soft_update_wave", s["segment_id"], self.cat.head() + 1,
-                 s["doc_count"], wall_ms, "done") for s in segs])
-        extra = ({"soft_delete_gens": self.cat.soft_delete_gens() + [gen]}
-                 if per_seg else None)
-        self.cat.commit(
-            self._bump_del_counts(live, per_seg, "soft_del_count") + segs,
-            operation="soft_update", extra=extra)
-        return [s["segment_id"] for s in segs]
+        return self._update(df, key_col, text_col, soft=True)
 
     # --- in-place DocValues updates (docValuesGen analog) ---------------------
     def _write_dv_files(self, targets: DataFrame) -> int:
@@ -612,10 +578,18 @@ class IndexWriter:
         uncommitted segments), then ONE snapshot commit publishes them
         together — a reader sees the old doc or the new doc, never neither
         (IndexWriter.java:1603 atomicity)."""
+        return self._update(df, key_col, text_col, soft=False)
+
+    def _update(self, df: DataFrame, key_col: str, text_col: str,
+                soft: bool) -> list[int]:
+        """Shared body of update_documents / soft_update_documents: they
+        differ only in the delete kind (and its counter, gens list, lineage
+        label and commit operation)."""
         t0 = time.time()
         live = self.cat.live_segments()
         targets = self._resolve_batch_targets(df, key_col)
-        per_seg, gen = self._write_delete_files(targets)
+        per_seg, gen = self._write_delete_files(
+            targets, kind="soft_deletes" if soft else "deletes")
 
         next_seg = max((s["segment_id"] for s in live), default=-1) + 1
         next_wave = max((s["wave"] for s in live), default=-1) + 1
@@ -639,13 +613,16 @@ class IndexWriter:
                 omit_freqs=self.omit_freqs, omit_norms=self.omit_norms,
                 store_offsets=self.store_offsets)
             wall_ms = int((time.time() - t0) * 1000)
+            label = "soft_update_wave" if soft else "update_wave"
             append_lineage(self.index_dir, [
-                ("update_wave", s["segment_id"], self.cat.head() + 1,
+                (label, s["segment_id"], self.cat.head() + 1,
                  s["doc_count"], wall_ms, "done") for s in segs])
-        extra = ({"delete_gens": self.cat.delete_gens() + [gen]}
-                 if per_seg else None)
-        self.cat.commit(self._bump_del_counts(live, per_seg) + segs,
-                        operation="update", extra=extra)
+        extra = self._delete_gens_extra(gen, soft) if per_seg else None
+        self.cat.commit(
+            self._bump_del_counts(live, per_seg,
+                                  "soft_del_count" if soft else "del_count")
+            + segs,
+            operation="soft_update" if soft else "update", extra=extra)
         return [s["segment_id"] for s in segs]
 
     # --- forced merges ------------------------------------------------------

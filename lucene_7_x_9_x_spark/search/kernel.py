@@ -4,15 +4,22 @@ Two execution paths over the same compressed postings:
 
   * exhaustive: decode every posting of every query term, dense-accumulate —
     the CheckHits-style reference path (test-framework/.../search/CheckHits.java:85).
-  * pruned: chunked block-max evaluation — the vectorized analog of block-max
-    WAND / MAXSCORE (WANDScorer.java:55-106,239-347; BlockMaxConjunctionScorer.java;
-    ImpactsDISI.java:100-136). The docid space is cut into fixed chunks; each
-    chunk's upper bound is the sum over terms of the max block impact overlapping
-    it; chunks are visited in descending bound order and skipped once the bound
-    falls below the running top-k threshold θ (only after totalHitsThreshold=1000
-    hits have been counted, IndexSearcher.java:105 semantics). Pruning can only
-    skip non-competitive work, so top-k (docids AND scores) is identical to the
+  * pruned: one chunked block-max walk (_block_max_top_k) — the vectorized
+    analog of block-max WAND / MAXSCORE (WANDScorer.java:55-106,239-347;
+    BlockMaxConjunctionScorer.java; ImpactsDISI.java:100-136) — for every
+    term, SHOULD-of-terms, MUST-of-terms [+SHOULD] and dismax-of-terms query.
+    The docid space is cut into fixed chunks; each chunk's upper bound
+    combines the clauses' max block impacts overlapping it by the shape's
+    rule (Σ, or max + tie·(Σ − max) for dismax); eligible chunks are visited
+    in descending bound order and skipped once the bound falls below the
+    running top-k threshold θ (only after totalHitsThreshold=1000 hits have
+    been counted, IndexSearcher.java:105 semantics). Pruning can only skip
+    non-competitive work, so top-k (docids AND scores) is identical to the
     exhaustive path — enforced by differential tests.
+
+Both paths take searchAfter pages as one more mask on the collected docs
+(score below the cursor's, or equal with docid past the leaf's floor);
+`hits` still counts every match.
 
 Float rounding mirrors Lucene exactly in float32 mode (see functions/bm25.py):
 per-term scores f32; conjunction/disjunction sums accumulate f64 then cast f32
@@ -1675,71 +1682,65 @@ def segment_top_k(seg: SegmentIndex, stats: bm25.BM25Stats,
                   global_df: Dict[str, int], q: Q.Query, k: int,
                   pruning: bool = True,
                   total_hits_threshold: int = TOTAL_HITS_THRESHOLD,
-                  counters: dict | None = None):
+                  counters: dict | None = None, after: tuple | None = None):
     """Per-segment search. Returns (docids, scores, hits, hits_exact).
 
-    Pruned shapes (each provably returns the exhaustive top-k):
-      * flat term OR            -> _pruned_or   (block-max WAND analog)
-      * flat term AND [+SHOULD] -> _pruned_and  (BlockMaxConjunctionScorer.java
-                                   :30,44 + ReqOptSumScorer, chosen for scored
-                                   MUST at Boolean2ScorerSupplier.java:173)
-      * flat term dismax        -> _pruned_dismax (same chunk skipping with the
-                                   max+tie*(sum-max) upper bound)
-    counters (optional dict) receives chunks_total/chunks_visited for
-    pruning-rate telemetry."""
+    With pruning, every shape _block_max_shape accepts (term, SHOULD-of-terms,
+    MUST-of-terms [+SHOULD], dismax-of-terms) runs the one block-max walk,
+    which provably returns the exhaustive top-k; everything else (and
+    pruning=False, the reference) scores exhaustively.
+    after=(score, doc_floor) is searchAfter on this leaf: only docs scoring
+    below `score`, or equal to it with docid > doc_floor, are collected;
+    `hits` still counts every match. counters (optional dict) receives
+    chunks_total/chunks_visited for pruning-rate telemetry."""
     q = _push_boost(q, 1.0)
-    scorer = Scorer(seg, stats, global_df)
     if pruning:
-        flat = _flat_term_disjunction(q)
-        if flat is not None:
-            return _pruned_or(seg, stats, global_df, flat, k,
-                              total_hits_threshold, counters)
-        conj = _flat_term_conjunction(q)
-        if conj is not None:
-            must, should = conj
-            return _pruned_and(seg, stats, global_df, must, should, k,
-                               total_hits_threshold, counters)
-        dm = _flat_term_dismax(q)
-        if dm is not None:
-            terms, tie = dm
-            return _pruned_dismax(seg, stats, global_df, terms, tie, k,
-                                  total_hits_threshold, counters)
-    docids, scores = scorer.eval_scored(q)
+        shape = _block_max_shape(q)
+        if shape is not None:
+            return _block_max_top_k(seg, stats, global_df, *shape, k,
+                                    total_hits_threshold, counters, after)
+    docids, scores = Scorer(seg, stats, global_df).eval_scored(q)
     hits = int(docids.size)
+    if after is not None:
+        keep = _after_mask(docids, scores, after)
+        docids, scores = docids[keep], scores[keep]
     d, s = top_k_from_scored(docids, scores, k)
     return d, s, hits, True
 
 
-def _flat_term_disjunction(q: Q.Query):
-    """Return [(term, boost)] if q is a pure SHOULD-of-TermQuery (msm<=1) —
-    the WAND-eligible shape (Boolean2ScorerSupplier.java:204)."""
+def _after_mask(docids: np.ndarray, scores: np.ndarray, after):
+    """searchAfter's competitive test within one leaf (TopScoreDocCollector's
+    paging collector: score desc, then docid asc past the cursor)."""
+    a_score, doc_floor = after
+    sf = scores.astype(np.float64)
+    return (sf < a_score) | ((sf == a_score) & (docids > doc_floor))
+
+
+def _block_max_shape(q: Q.Query):
+    """(must, should, tie) of [(term, boost)] lists when q is a block-max
+    eligible shape, else None:
+      * TermQuery, or SHOULD-of-terms with msm<=1 -> ([], terms, None)
+        (WAND, Boolean2ScorerSupplier.java:204)
+      * MUST-of-terms [+ SHOULD-of-terms], msm=0, no must_not/filter
+        -> (must, should, None) (BlockMaxConjunctionScorer + ReqOptSum,
+        chosen for scored MUST at Boolean2ScorerSupplier.java:173)
+      * dismax of terms -> ([], terms, tie_breaker)"""
+    def flat(clauses):
+        return [(c.term, c.boost) for c in clauses]
     if isinstance(q, Q.TermQuery):
-        return [(q.term, q.boost)]
-    if (isinstance(q, Q.BooleanQuery) and not q.must and not q.must_not
-            and not q.filter and q.minimum_should_match <= 1 and q.should
-            and all(isinstance(s, Q.TermQuery) for s in q.should)):
-        return [(s.term, s.boost) for s in q.should]
-    return None
-
-
-def _flat_term_conjunction(q: Q.Query):
-    """([(must_term, boost)], [(should_term, boost)]) if q is a
-    MUST-of-terms conjunction (optional SHOULD-of-terms, msm=0, no
-    must_not/filter) — the BlockMaxConjunction-eligible shape."""
-    if (isinstance(q, Q.BooleanQuery) and q.must and not q.must_not
-            and not q.filter and q.minimum_should_match == 0
-            and all(isinstance(s, Q.TermQuery) for s in q.must)
-            and all(isinstance(s, Q.TermQuery) for s in q.should)):
-        return ([(s.term, s.boost) for s in q.must],
-                [(s.term, s.boost) for s in q.should])
-    return None
-
-
-def _flat_term_dismax(q: Q.Query):
-    """([(term, boost)], tie_breaker) if q is a dismax of TermQuery."""
-    if (isinstance(q, Q.DisjunctionMaxQuery)
-            and all(isinstance(s, Q.TermQuery) for s in q.queries)):
-        return [(s.term, s.boost) for s in q.queries], q.tie_breaker
+        return [], [(q.term, q.boost)], None
+    if isinstance(q, Q.DisjunctionMaxQuery):
+        if all(isinstance(c, Q.TermQuery) for c in q.queries):
+            return [], flat(q.queries), q.tie_breaker
+        return None
+    if (not isinstance(q, Q.BooleanQuery) or q.must_not or q.filter
+            or not all(isinstance(c, Q.TermQuery)
+                       for c in (*q.must, *q.should))):
+        return None
+    if q.must and q.minimum_should_match == 0:
+        return flat(q.must), flat(q.should), None
+    if not q.must and q.should and q.minimum_should_match <= 1:
+        return [], flat(q.should), None
     return None
 
 
@@ -1764,73 +1765,73 @@ def _paint_chunk_bounds(n_chunks: int, c0: np.ndarray, c1: np.ndarray,
 
 
 def _chunk_bounds(seg: SegmentIndex, stats, gdf, terms, n_chunks: int):
-    """Per-term per-chunk score upper bounds from the block-max metadata.
-    Returns (tbs: {term: float64[n_chunks]}, has: {term: bool[n_chunks]},
-    weights, metas)."""
-    tbs, has, weights, metas = {}, {}, {}, {}
+    """Per-clause chunk upper bounds from the block-max metadata, one
+    (term, field stats, weight, (first, last) block docids, bound float64
+    [n_chunks], has-block bool[n_chunks]) per (term, boost) clause present
+    in the segment."""
+    out = []
     for t, boost in terms:
+        if not seg.has(t):
+            continue
         st_t = _stats_for(stats, t)
         w = _weight_for(st_t, t, gdf.get(t, 0), boost)
-        weights[t] = (st_t, w)
-        if seg.has(t):
-            first, last, mf, mn = seg.block_meta(t)
-            bmax = st_t.score(mf, mn, w)
-            tb, hb = _paint_chunk_bounds(n_chunks, first // CHUNK,
-                                         last // CHUNK, bmax)
-            metas[t] = (first, last)
-        else:
-            tb = np.zeros(n_chunks, dtype=np.float64)
-            hb = np.zeros(n_chunks, dtype=bool)
-        tbs[t], has[t] = tb, hb
-    return tbs, has, weights, metas
+        first, last, mf, mn = seg.block_meta(t)
+        tb, hb = _paint_chunk_bounds(n_chunks, first // CHUNK, last // CHUNK,
+                                     st_t.score(mf, mn, w))
+        out.append((t, st_t, w, (first, last), tb, hb))
+    return out
 
 
-def _accum_chunk(seg, stats, metas, weights, terms, lo, hi, acc, cnt, mask):
-    """Decode each term's blocks overlapping [lo, hi) and accumulate scores
-    into the dense chunk arrays (float64 accumulation, Lucene's double-sum).
-    weights[t] = (field-resolved stats, precomputed weight)."""
-    for t, _ in terms:
-        if t not in metas:
-            continue
-        st_t, w = weights[t]
-        first, last = metas[t]
-        bs = np.flatnonzero((first < hi) & (last >= lo))
-        for bi in bs:
+def _accum_chunk(seg, clauses, lo, hi, mx=None):
+    """Decode each clause's blocks overlapping [lo, hi) into dense chunk
+    arrays: (float64 score sum — Lucene's double-sum —, int32 match count).
+    mx, when given, receives the per-doc max clause score (dismax)."""
+    acc = np.zeros(hi - lo, dtype=np.float64)
+    cnt = np.zeros(hi - lo, dtype=np.int32)
+    for t, st_t, w, (first, last), _, _ in clauses:
+        for bi in np.flatnonzero((first < hi) & (last >= lo)):
             d, f, n = seg.decode_block(t, int(bi))
             sel = (d >= lo) & (d < hi)
             if not sel.any():
                 continue
-            s = st_t.score(f[sel], n[sel], w)
-            acc[d[sel] - lo] += s.astype(np.float64)
-            if cnt is not None:
-                cnt[d[sel] - lo] += 1
-            mask[d[sel] - lo] = True
+            i = d[sel] - lo
+            s = st_t.score(f[sel], n[sel], w).astype(np.float64)
+            acc[i] += s
+            cnt[i] += 1
+            if mx is not None:
+                np.maximum.at(mx, i, s)
+    return acc, cnt
 
 
-def _pruned_and(seg: SegmentIndex, stats, gdf: Dict[str, int],
-                must, should, k: int, threshold: int,
-                counters: dict | None = None):
-    """Chunked block-max conjunction + optional SHOULD (ReqOptSum): visit
-    chunks where ALL must terms have blocks, in descending upper-bound order,
-    skipping chunks whose bound falls below θ once totalHitsThreshold hits
-    are counted. Scores reproduce _eval_bool bit-for-bit (f64 req/opt sums
-    cast to dtype, ReqOptSumScorer.java:255-265 combine)."""
+def _block_max_top_k(seg: SegmentIndex, stats, gdf: Dict[str, int],
+                     must, should, tie, k: int, threshold: int,
+                     counters: dict | None = None, after=None):
+    """The chunked block-max walk for every pruned shape. A chunk is
+    eligible when every MUST term has a block in it (any SHOULD term's,
+    without MUST); its bound combines the clauses' block maxima as Σ, or
+    max + tie·(Σ − max) for dismax — a valid upper bound of each doc's
+    score. Chunks are visited in descending bound order and skipped once the
+    bound falls below θ after totalHitsThreshold hits are counted. Scores
+    reproduce the exhaustive path bit-for-bit: f64 sums cast to dtype,
+    ReqOptSum adds the two casts (ReqOptSumScorer.java:255-265), dismax casts
+    max + tie·(sum − max)."""
     dt = stats.dtype
     max_doc = seg.max_doc
     n_chunks = (max_doc + CHUNK - 1) // CHUNK
-    empty = (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=dt), 0, True)
-    if n_chunks == 0 or any(not seg.has(t) for t, _ in must):
-        return empty
-    m_tbs, m_has, m_w, m_metas = _chunk_bounds(seg, stats, gdf, must, n_chunks)
-    s_tbs, s_has, s_w, s_metas = _chunk_bounds(seg, stats, gdf, should,
-                                               n_chunks)
-    eligible = np.ones(n_chunks, dtype=bool)
+    req = _chunk_bounds(seg, stats, gdf, must, n_chunks)
+    opt = _chunk_bounds(seg, stats, gdf, should, n_chunks)
+    if n_chunks == 0 or len(req) < len(must) or not (req or opt):
+        return (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=dt), 0, True)
     bounds = np.zeros(n_chunks, dtype=np.float64)
-    for t, _ in must:
-        eligible &= m_has[t]
-        bounds += m_tbs[t]
-    for t, _ in should:
-        bounds += s_tbs[t]
+    for *_, tb, _ in req + opt:
+        bounds += tb
+    if tie is not None:
+        mx = np.max([tb for *_, tb, _ in opt], axis=0)
+        bounds = mx + (bounds - mx) * tie
+    if req:
+        eligible = np.logical_and.reduce([hb for *_, hb in req])
+    else:
+        eligible = np.logical_or.reduce([hb for *_, hb in opt])
     order = [int(c) for c in np.argsort(-bounds, kind="stable")
              if eligible[c]]
     if counters is not None:
@@ -1838,7 +1839,6 @@ def _pruned_and(seg: SegmentIndex, stats, gdf: Dict[str, int],
     top_d = np.zeros(0, dtype=np.int64)
     top_s = np.zeros(0, dtype=dt)
     hits, exact, theta = 0, True, -np.inf
-    n_must = len(must)
     for c in order:
         if hits >= threshold and top_d.size >= k and bounds[c] < theta:
             exact = False
@@ -1846,162 +1846,34 @@ def _pruned_and(seg: SegmentIndex, stats, gdf: Dict[str, int],
         if counters is not None:
             counters["chunks_visited"] = counters.get("chunks_visited", 0) + 1
         lo, hi = c * CHUNK, min((c + 1) * CHUNK, max_doc)
-        req = np.zeros(hi - lo, dtype=np.float64)
-        cnt = np.zeros(hi - lo, dtype=np.int32)
-        mmask = np.zeros(hi - lo, dtype=bool)
-        _accum_chunk(seg, stats, m_metas, m_w, must, lo, hi, req, cnt, mmask)
-        local = np.flatnonzero(cnt == n_must)
-        if local.size == 0:
-            continue
-        if should:
-            opt = np.zeros(hi - lo, dtype=np.float64)
-            omask = np.zeros(hi - lo, dtype=bool)
-            _accum_chunk(seg, stats, s_metas, s_w, should, lo, hi, opt,
-                         None, omask)
-            r = req[local].astype(dt)
-            o = opt[local].astype(dt)
-            cs = r.copy()
-            has_o = omask[local]
-            cs[has_o] = (r[has_o] + o[has_o]).astype(dt)
+        if req:
+            r_acc, r_cnt = _accum_chunk(seg, req, lo, hi)
+            local = np.flatnonzero(r_cnt == len(req))
+            if local.size == 0:
+                continue
+            cs = r_acc[local].astype(dt)
+            if opt:
+                o_acc, o_cnt = _accum_chunk(seg, opt, lo, hi)
+                has_o = o_cnt[local] > 0
+                cs[has_o] = (cs[has_o] + o_acc[local][has_o].astype(dt)
+                             ).astype(dt)
         else:
-            cs = req[local].astype(dt)
-        hits += int(local.size)
-        top_d = np.concatenate([top_d, local + lo])
-        top_s = np.concatenate([top_s, cs])
-        top_d, top_s = top_k_from_scored(top_d, top_s, k)
-        if top_d.size >= k:
-            theta = float(top_s[-1])
-    return top_d, top_s, hits, exact
-
-
-def _pruned_dismax(seg: SegmentIndex, stats, gdf: Dict[str, int],
-                   terms, tie: float, k: int, threshold: int,
-                   counters: dict | None = None):
-    """Chunked block-max dismax: chunk bound = max_i b_i + tie*(Σb - max_i b)
-    — a valid upper bound of max + tie*(sum-max) per doc."""
-    dt = stats.dtype
-    max_doc = seg.max_doc
-    n_chunks = (max_doc + CHUNK - 1) // CHUNK
-    present = [(t, b) for (t, b) in terms if seg.has(t)]
-    if not present or n_chunks == 0:
-        return (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=dt), 0, True)
-    tbs, has, weights, metas = _chunk_bounds(seg, stats, gdf, present,
-                                             n_chunks)
-    any_has = np.zeros(n_chunks, dtype=bool)
-    mx = np.zeros(n_chunks, dtype=np.float64)
-    sm = np.zeros(n_chunks, dtype=np.float64)
-    for t, _ in present:
-        any_has |= has[t]
-        mx = np.maximum(mx, tbs[t])
-        sm += tbs[t]
-    bounds = mx + (sm - mx) * tie
-    order = [int(c) for c in np.argsort(-bounds, kind="stable")
-             if any_has[c]]
-    if counters is not None:
-        counters["chunks_total"] = counters.get("chunks_total", 0) + len(order)
-    top_d = np.zeros(0, dtype=np.int64)
-    top_s = np.zeros(0, dtype=dt)
-    hits, exact, theta = 0, True, -np.inf
-    for c in order:
-        if hits >= threshold and top_d.size >= k and bounds[c] < theta:
-            exact = False
-            break
-        if counters is not None:
-            counters["chunks_visited"] = counters.get("chunks_visited", 0) + 1
-        lo, hi = c * CHUNK, min((c + 1) * CHUNK, max_doc)
-        dmx = np.full(hi - lo, -np.inf, dtype=np.float64)
-        dsm = np.zeros(hi - lo, dtype=np.float64)
-        mask = np.zeros(hi - lo, dtype=bool)
-        for t, _ in present:
-            st_t, w = weights[t]
-            first, last = metas[t]
-            bs = np.flatnonzero((first < hi) & (last >= lo))
-            for bi in bs:
-                d, f, n = seg.decode_block(t, int(bi))
-                sel = (d >= lo) & (d < hi)
-                if not sel.any():
-                    continue
-                s = st_t.score(f[sel], n[sel], w).astype(np.float64)
-                np.maximum.at(dmx, d[sel] - lo, s)
-                dsm[d[sel] - lo] += s
-                mask[d[sel] - lo] = True
-        local = np.flatnonzero(mask)
-        if local.size == 0:
-            continue
-        cs = (dmx[local] + (dsm[local] - dmx[local]) * tie).astype(dt)
-        hits += int(local.size)
-        top_d = np.concatenate([top_d, local + lo])
-        top_s = np.concatenate([top_s, cs])
-        top_d, top_s = top_k_from_scored(top_d, top_s, k)
-        if top_d.size >= k:
-            theta = float(top_s[-1])
-    return top_d, top_s, hits, exact
-
-
-def _pruned_or(seg: SegmentIndex, stats: bm25.BM25Stats, gdf: Dict[str, int],
-               terms, k: int, threshold: int, counters: dict | None = None):
-    """Chunked block-max disjunction (vectorized WAND analog)."""
-    dt = stats.dtype
-    max_doc = seg.max_doc
-    n_chunks = (max_doc + CHUNK - 1) // CHUNK
-    present = [(t, b) for (t, b) in terms if seg.has(t)]
-    if not present or n_chunks == 0:
-        return (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=dt), 0, True)
-
-    bounds = np.zeros(n_chunks, dtype=np.float64)
-    has_block = np.zeros(n_chunks, dtype=bool)
-    metas = {}
-    weights = {}
-    for t, boost in present:
-        st_t = _stats_for(stats, t)
-        w = _weight_for(st_t, t, gdf.get(t, 0), boost)
-        weights[t] = (st_t, w)
-        first, last, mf, mn = seg.block_meta(t)
-        bmax = st_t.score(mf, mn, w)
-        tb, hb = _paint_chunk_bounds(n_chunks, first // CHUNK, last // CHUNK,
-                                     bmax)
-        has_block |= hb
-        bounds += tb
-        metas[t] = (first, last)
-
-    order = [int(c) for c in np.argsort(-bounds, kind="stable") if has_block[c]]
-    if counters is not None:
-        counters["chunks_total"] = counters.get("chunks_total", 0) + len(order)
-    top_d = np.zeros(0, dtype=np.int64)
-    top_s = np.zeros(0, dtype=dt)
-    hits = 0
-    exact = True
-    theta = -np.inf
-    for c in order:
-        if hits >= threshold and top_d.size >= k and bounds[c] < theta:
-            exact = False
-            break
-        if counters is not None:
-            counters["chunks_visited"] = counters.get("chunks_visited", 0) + 1
-        lo, hi = int(c) * CHUNK, min((int(c) + 1) * CHUNK, max_doc)
-        acc = np.zeros(hi - lo, dtype=np.float64)
-        mask = np.zeros(hi - lo, dtype=bool)
-        for t, _ in present:
-            st_t, w = weights[t]
-            first, last = metas[t]
-            bs = np.flatnonzero((first < hi) & (last >= lo))
-            for bi in bs:
-                d, f, n = seg.decode_block(t, int(bi))
-                sel = (d >= lo) & (d < hi)
-                if not sel.any():
-                    continue
-                s = st_t.score(f[sel], n[sel], w)
-                acc[d[sel] - lo] += s.astype(np.float64)
-                mask[d[sel] - lo] = True
-        local = np.flatnonzero(mask)
+            dmx = (None if tie is None
+                   else np.full(hi - lo, -np.inf, dtype=np.float64))
+            acc, cnt = _accum_chunk(seg, opt, lo, hi, dmx)
+            local = np.flatnonzero(cnt)
+            cs = acc[local] if tie is None else (
+                dmx[local] + (acc[local] - dmx[local]) * tie)
+            cs = cs.astype(dt)
         if local.size == 0:
             continue
         hits += int(local.size)
         cd = local + lo
-        cs = acc[local].astype(dt)
-        top_d = np.concatenate([top_d, cd])
-        top_s = np.concatenate([top_s, cs])
-        top_d, top_s = top_k_from_scored(top_d, top_s, k)
+        if after is not None:
+            keep = _after_mask(cd, cs, after)
+            cd, cs = cd[keep], cs[keep]
+        top_d, top_s = top_k_from_scored(np.concatenate([top_d, cd]),
+                                         np.concatenate([top_s, cs]), k)
         if top_d.size >= k:
             theta = float(top_s[-1])
     return top_d, top_s, hits, exact

@@ -751,23 +751,18 @@ class IndexSearcher:
 
         def top_k(seg_id: int) -> pd.DataFrame:
             seg = _open_segment(ctx, seg_id, q)
-            stats = _make_stats(stats_args)
-            if after is None:
-                d, s, hits, exact = K.segment_top_k(
-                    seg, stats, gdf, q, k, pruning=pruning,
-                    total_hits_threshold=total_hits_threshold)
-            else:
-                d, s = K.Scorer(seg, stats, gdf).eval_scored(
-                    K._push_boost(q, 1.0))
-                hits, exact = int(d.size), True
+            leaf_after = None
+            if after is not None:
+                # the (score, ord, doc) cursor as this leaf's doc floor for
+                # ties at the cursor score: every doc of a later leaf, the
+                # docs past the cursor in its own leaf, none of an earlier one
                 a_score, a_ord, a_doc = after
                 my_ord = seg_ords[seg_id]
-                sf = s.astype(np.float64)
-                keep = (sf < a_score) | (
-                    (sf == a_score)
-                    & ((my_ord > a_ord) | ((my_ord == a_ord) & (d > a_doc)))
-                )
-                d, s = K.top_k_from_scored(d[keep], s[keep], k)
+                leaf_after = (a_score, -1 if my_ord > a_ord else
+                              a_doc if my_ord == a_ord else seg.max_doc)
+            d, s, hits, exact = K.segment_top_k(
+                seg, _make_stats(stats_args), gdf, q, k, pruning=pruning,
+                total_hits_threshold=total_hits_threshold, after=leaf_after)
             return pd.DataFrame({
                 "segment_id": np.full(d.size, seg_id, dtype=np.int32),
                 "docid": d.astype(np.int32),

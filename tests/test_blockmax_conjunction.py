@@ -1,6 +1,7 @@
-"""Block-max conjunction / dismax pruning: differential (pruned == exhaustive)
-plus evidence that the pruned paths actually SKIP chunks once θ is competitive
-(BlockMaxConjunctionScorer.java:30,44; Boolean2ScorerSupplier.java:173)."""
+"""The one block-max walk (term, OR, AND [+SHOULD], dismax): differential
+(pruned == exhaustive, also for searchAfter pages) plus evidence that the walk
+actually SKIPS chunks once θ is competitive (WANDScorer.java;
+BlockMaxConjunctionScorer.java:30,44; Boolean2ScorerSupplier.java:173)."""
 
 import numpy as np
 import pytest
@@ -43,6 +44,9 @@ QUERIES = [
                           tie_breaker=0.3),
     Q.DisjunctionMaxQuery((Q.TermQuery("alpha"), Q.TermQuery("beta"),
                            Q.TermQuery("gamma")), tie_breaker=0.0),
+    Q.TermQuery("alpha"),
+    Q.BooleanQuery(should=(Q.TermQuery("alpha", 1.5), Q.TermQuery("beta"),
+                           Q.TermQuery("gamma"))),
 ]
 
 
@@ -59,7 +63,7 @@ def test_pruned_equals_exhaustive(qi):
         assert hp == he
 
 
-@pytest.mark.parametrize("qi", [0, 2, 3])
+@pytest.mark.parametrize("qi", [0, 2, 3, 5, 6])
 def test_pruning_skips_chunks(qi):
     q = QUERIES[qi]
     seg, stats, gdf = _make_segment()
@@ -71,13 +75,72 @@ def test_pruning_skips_chunks(qi):
 
 
 def test_conjunction_routing():
-    assert K._flat_term_conjunction(QUERIES[0]) is not None
-    assert K._flat_term_dismax(QUERIES[3]) is not None
-    # not eligible: must_not present, msm>0, non-term clause
-    assert K._flat_term_conjunction(Q.BooleanQuery(
-        must=(Q.TermQuery("a"),), must_not=(Q.TermQuery("b"),))) is None
-    assert K._flat_term_conjunction(Q.BooleanQuery(
-        must=(Q.PhraseQuery(("a", "b")),))) is None
-    assert K._flat_term_conjunction(Q.BooleanQuery(
-        must=(Q.TermQuery("a"),), should=(Q.TermQuery("b"),),
-        minimum_should_match=1)) is None
+    t = Q.TermQuery
+    assert K._block_max_shape(t("a", 2.0)) == ([], [("a", 2.0)], None)
+    assert K._block_max_shape(QUERIES[0]) == (
+        [("alpha", 1.0), ("beta", 1.0)], [], None)
+    assert K._block_max_shape(QUERIES[2]) == (
+        [("alpha", 2.0)], [("gamma", 0.5)], None)
+    assert K._block_max_shape(QUERIES[3]) == (
+        [], [("alpha", 1.0), ("gamma", 1.0)], 0.3)
+    # OR with msm <= 1 is the WAND shape
+    for msm in (0, 1):
+        assert K._block_max_shape(Q.BooleanQuery(
+            should=(t("a"), t("b")), minimum_should_match=msm)) == (
+            [], [("a", 1.0), ("b", 1.0)], None)
+    # not eligible: must_not, filter, msm>0 with MUST, msm 2 OR, non-term
+    for q in (
+        Q.BooleanQuery(must=(t("a"),), must_not=(t("b"),)),
+        Q.BooleanQuery(must=(t("a"),), filter=(t("b"),)),
+        Q.BooleanQuery(should=(t("a"),), filter=(t("b"),)),
+        Q.BooleanQuery(must=(Q.PhraseQuery(("a", "b")),)),
+        Q.BooleanQuery(must=(t("a"),), should=(t("b"),),
+                       minimum_should_match=1),
+        Q.BooleanQuery(should=(t("a"), t("b"), t("c")),
+                       minimum_should_match=2),
+        Q.DisjunctionMaxQuery((t("a"), Q.PhraseQuery(("a", "b")))),
+        Q.PhraseQuery(("a", "b")),
+    ):
+        assert K._block_max_shape(q) is None, q
+
+
+@pytest.mark.parametrize("qi", range(len(QUERIES)))
+def test_after_pruned_equals_exhaustive(qi):
+    """searchAfter pages through the walk equal the exhaustive path's, for
+    three cursor depths and a cursor leaf before, at and after this one."""
+    q = QUERIES[qi]
+    seg, stats, gdf = _make_segment()
+    all_d, all_s, n_hits, _ = K.segment_top_k(seg, stats, gdf, q, 10 ** 9,
+                                              pruning=False)
+    assert n_hits > 100
+    for depth in (9, 100, n_hits // 2):
+        a_score, a_doc = float(all_s[depth]), int(all_d[depth])
+        for floor in (-1, a_doc, seg.max_doc):
+            after = (a_score, floor)
+            dp, sp, hp, ep = K.segment_top_k(
+                seg, stats, gdf, q, 10, pruning=True,
+                total_hits_threshold=100, after=after)
+            de, se, he, ee = K.segment_top_k(
+                seg, stats, gdf, q, 10, pruning=False, after=after)
+            assert dp.size == 10
+            assert (dp == de).all() and (sp == se).all(), (depth, floor)
+            assert ee and he == n_hits
+            if ep:
+                assert hp == he
+
+
+def test_duplicate_term_clauses_keep_their_boosts():
+    """Two clauses on one term with different boosts are two scorers: the
+    walk must weight (and bound) each with its own boost."""
+    t = Q.TermQuery
+    for q in (Q.BooleanQuery(should=(t("alpha", 3.0), t("alpha", 0.5))),
+              Q.BooleanQuery(must=(t("alpha", 3.0), t("alpha", 0.5))),
+              Q.BooleanQuery(must=(t("beta"),),
+                             should=(t("alpha", 3.0), t("alpha", 0.5))),
+              Q.DisjunctionMaxQuery((t("alpha", 0.5), t("alpha", 3.0)),
+                                    tie_breaker=0.2)):
+        seg, stats, gdf = _make_segment()
+        dp, sp, _, _ = K.segment_top_k(seg, stats, gdf, q, 10, pruning=True,
+                                       total_hits_threshold=100)
+        de, se, _, _ = K.segment_top_k(seg, stats, gdf, q, 10, pruning=False)
+        assert (dp == de).all() and (sp == se).all(), q

@@ -199,6 +199,26 @@ def test_search_after_pagination(built):
     _assert_equal_topk(got, want[5:], "searchAfter")
 
 
+def test_search_after_pruned_equals_exhaustive(built):
+    """Page 2 through the block-max walk equals page 2 through the
+    exhaustive path and the oracle, for every block-max shape."""
+    _, searcher, oracle = built
+    queries = _register_queries(oracle)
+    for name in ("Q1_term_mid_df", "Q4_or5_with_stopword", "Q5_and2",
+                 "Q7_must_should", "Q_boost", "Q_dismax"):
+        q = queries[name]
+        last = searcher.search(q, k=5, fetch_keys=False).hits.iloc[-1]
+        after = (float(last.score), searcher.seg_ords[int(last.segment_id)],
+                 int(last.docid))
+        want, _ = oracle.top_k(q, k=10)
+        for pruning in (True, False):
+            page2 = searcher.search(q, k=5, pruning=pruning, after=after,
+                                    total_hits_threshold=1, fetch_keys=False)
+            got = [(int(r.segment_id), int(r.docid), float(r.score))
+                   for r in page2.hits.itertuples()]
+            _assert_equal_topk(got, want[5:], f"{name} pruning={pruning}")
+
+
 # Two segments (keys 0-1, 2-3); only key 1 holds "gamma", so segment 1 has
 # no postings row for it.
 GAMMA_ROWS = [(0, "alpha beta"), (1, "alpha gamma"), (2, "beta delta"),
